@@ -108,17 +108,19 @@ def main() -> None:
         pts = B.synth_blob_points(spark, B.DBSCAN_ROWS).withColumn(
             "t", (F.col("pid") * 37 % 86400).cast("long")
         ).cache()
-        pts.count()
-        t0 = time.time()
-        n = B.force(
-            st_dbscan(
-                pts, E.WM, eps_space=5_000.0, eps_time=600, min_pts=8,
-                id_col="pid",
+        try:
+            pts.count()
+            t0 = time.time()
+            n = B.force(
+                st_dbscan(
+                    pts, E.WM, eps_space=5_000.0, eps_time=600, min_pts=8,
+                    id_col="pid",
+                )
             )
-        )
-        dt = time.time() - t0
-        assert n == B.DBSCAN_ROWS
-        pts.unpersist()
+            dt = time.time() - t0
+            assert n == B.DBSCAN_ROWS
+        finally:
+            pts.unpersist()
         return {"sec": dt}
 
     benches = {

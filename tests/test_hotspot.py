@@ -125,6 +125,22 @@ def test_uniform_counts_gi_null(spark, wm):
     assert all(v[3] is None for v in got.values())
 
 
+def test_null_x_row_is_dropped(spark, wm):
+    # documented contract of gi_star_from_counts: a NULL-x tile gets no
+    # output row but still counts in n and in its neighbours' ring_n
+    from tile_grid_spark.operators.hotspot import gi_star_from_counts
+
+    counts = spark.createDataFrame(
+        [(3, 3, 5), (4, 3, 1), (3, 4, None), (9, 9, 2)],
+        "tile_x INT, tile_y INT, x BIGINT",
+    )
+    got = {
+        (r["tile_x"], r["tile_y"]): (r["x"], r["ring_sum"], r["ring_n"])
+        for r in gi_star_from_counts(counts, wm, 5).collect()
+    }
+    assert got == {(3, 3): (5, 6, 3), (4, 3): (1, 6, 3), (9, 9): (2, 2, 1)}
+
+
 class TestStreamHotspot:
     """Streaming twin: the maintained count store derives a Gi* layer
     BIT-identical to the batch operator over the union of all streamed

@@ -88,7 +88,12 @@ def gi_star_from_counts(counts: DataFrame, tms: Tms, zoom: int) -> DataFrame:
     integers; identical integers give bit-identical gi, which is what
     the replay-equals-batch gate asserts. Tiles outside the clamp
     domain [0, width-1] x [0, height-1] are excluded exactly like the
-    points path."""
+    points path.
+
+    A row with NULL x is dropped from the output (a tile is in the study
+    set only when its own x is non-NULL). It still counts toward the
+    study-tile count n and toward its neighbours' ring_n, adding 0 to
+    every sum; filter NULL rows out first if that is not wanted."""
     p = tms.zoom_params(zoom)
     counts = counts.filter(
         (F.col("tile_x") >= 0)

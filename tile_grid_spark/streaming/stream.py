@@ -245,9 +245,10 @@ def exactly_once_batch_committer(log, stage: str = "stream", out_root: str | Non
     Structured Streaming gives at-least-once foreachBatch delivery: a
     batch in flight during a crash is REPLAYED after restart with the
     SAME batch_id. Writing each batch through plans/lineage.run_stage
-    (write to _tmp -> fingerprint -> atomic rename -> lineage row) makes
-    the replay a no-op — the unit `batch-<id>` is already recorded
-    complete, so the second delivery skips. At-least-once delivery +
+    (write to _tmp with the fingerprint observed on the write -> atomic
+    rename -> lineage row) makes the replay a no-op — the unit
+    `batch-<id>` is already recorded complete, so the second delivery
+    skips. At-least-once delivery +
     idempotent commit = exactly-once OUTPUT, with the same per-partition
     lineage/metrics audit trail as the batch pipeline.
     """
