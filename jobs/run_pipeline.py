@@ -7,27 +7,41 @@ Production:
     spark-submit --py-files tile_grid_spark.zip jobs/run_pipeline.py \
         --out s3://bucket/tiles --images <iceberg table> --zooms 0-14
 
-Stages (each resumable via per-partition lineage, see plans/lineage.py):
-  ingest   - synthesize (or read) the image+caption table
-  assign   - tile assignment per zoom, written partitioned by zoom,
-             range-sorted by (tile_x, tile_y)
-  stats    - per-tile density aggregate with measured salting
-  hotspot  - Getis-Ord Gi* significance layer per deep-zoom tile
-  pyramid  - cascading rollup of the per-tile stats
-  sketches - mergeable HLL distinct sketches per tile
-  polys    - deterministic polygon layer (second input table)
-  pip      - point-in-polygon join images x polys on the SHUFFLE path
-             (multi-input, shuffle-bearing — the resume shapes that
-             matter at scale)
-  dedup    - MinHash+LSH caption near-dup pairs (banded shuffle)
-  cluster  - pairs -> connected components -> keep-one verdicts
-  export   - dedup-filtered, caption-length-stratified sample written
-             as deterministic training shards + manifest
-  raster   - per-tile density masks at the deepest zoom
+Stages (each resumable via per-partition lineage, see plans/lineage.py),
+in declared order, with the stages whose output each one reads:
+  ingest      (none)         synthesize (or read) the image+caption table
+  assign      ingest         tile assignment per zoom, written partitioned
+                             by zoom, range-sorted by (tile_x, tile_y)
+  stats       assign         per-tile density aggregate with measured salting
+  hotspot     ingest         Getis-Ord Gi* significance layer per deep-zoom tile
+  pyramid     stats          cascading rollup of the per-tile stats
+  sketches    assign         mergeable HLL distinct sketches per tile
+  polys       (none)         deterministic polygon layer (second input table)
+  pip         ingest, polys  point-in-polygon join images x polys on the
+                             SHUFFLE path (multi-input, shuffle-bearing —
+                             the resume shapes that matter at scale)
+  dedup       ingest         MinHash+LSH caption near-dup pairs (banded shuffle)
+  cluster     ingest, dedup  pairs -> connected components -> keep-one verdicts
+  export      ingest, cluster
+                             dedup-filtered, caption-length-stratified sample
+                             written as deterministic training shards + manifest
+  raster      ingest         per-tile density masks at the deepest zoom
+  mvt         ingest         vector-tile payload export (the served artifact)
+  mvt_pyramid mvt            upper-zoom MVT tiles rolled up from the child binaries
+
+The stages form a DAG, not a chain: each one starts on its own driver
+thread as soon as every stage it reads has completed, so the stages that
+only read `ingest` run side by side and share the cluster. A stage's
+output is read once, right after it completes, and handed to the stages
+that read it. If a stage fails, no further stage starts; the ones already
+running finish (and record their lineage) and the failure is re-raised.
 
 Re-running the same command after an interruption skips completed units
 (check the `_lineage` parquet for the audit trail). `stop_after=<stage>`
-simulates a crash right after a stage for the resume tests.
+simulates a crash right after a stage for the resume tests: it runs the
+declared-order prefix up to and including that stage (still as a DAG).
+A stage with no units in this run — `pyramid` with a single zoom,
+`mvt_pyramid` at raster zoom 0 — still ends the prefix at its position.
 """
 
 from __future__ import annotations
@@ -35,18 +49,29 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from tile_grid_spark.core import tms
 from tile_grid_spark.functions import grid_cols as G
-from tile_grid_spark.operators.raster import rasterize_points
+from tile_grid_spark.operators.cluster import connected_components
+from tile_grid_spark.operators.dedup import minhash_lsh_pairs
+from tile_grid_spark.operators.hotspot import getis_ord_gi_star
+from tile_grid_spark.operators.pip_join import generate_polygons, pip_join
+from tile_grid_spark.operators.raster import rasterize_footprints, rasterize_points
+from tile_grid_spark.operators.rollup import tile_pyramid
+from tile_grid_spark.operators.sample import stratified_sample
+from tile_grid_spark.operators.sketches import tile_hll_sketches
+from tile_grid_spark.operators.vector_tiles import encode_point_tiles, rollup_point_tiles
 from tile_grid_spark.plans.lineage import LineageLog, run_stage
 from tile_grid_spark.plans.session import build_session
 from tile_grid_spark.plans.skew import measure_tile_skew, salted_tile_agg, skew_stats
 from tile_grid_spark.sources.datagen import generate_images
+from tile_grid_spark.sources.io import write_training_shards
 
 
 def parse_zooms(s: str) -> list[int]:
@@ -54,6 +79,47 @@ def parse_zooms(s: str) -> list[int]:
         a, b = s.split("-")
         return list(range(int(a), int(b) + 1))
     return [int(x) for x in s.split(",")]
+
+
+def run_dag(spark, plan, on_done=None) -> dict:
+    """Run `plan`, a list of (name, inputs, fn) in declared order: each fn
+    starts on a pool thread as soon as every stage named in its `inputs`
+    has returned, ready stages in declared order. Returns {name: fn()} in
+    declared order; `on_done(name, result)` is called on this thread as
+    each stage completes. After a stage raises, no further stage starts,
+    the running ones finish, and the first exception is re-raised."""
+    order = [name for name, _, _ in plan]
+    for i, (name, inputs, _) in enumerate(plan):
+        if not set(inputs) <= set(order[:i]):
+            raise ValueError(f"stage {name!r} reads {sorted(set(inputs) - set(order[:i]))}, "
+                             "which do not run before it")
+    done: dict = {}
+    pending = list(plan)
+    running = {}
+    error = None
+    with ThreadPoolExecutor(max_workers=max(len(plan), 1), thread_name_prefix="stage") as pool:
+        while pending or running:
+            ready = [] if error else [s for s in pending if all(i in done for i in s[1])]
+            for stage in ready:
+                pending.remove(stage)
+                # job tags and local properties (job group, pool) carry over
+                fn = inheritable_thread_target(spark)(stage[2])
+                running[pool.submit(fn)] = stage[0]
+            if not running:
+                break
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                name = running.pop(fut)
+                try:
+                    done[name] = fut.result()
+                except BaseException as e:  # re-raised once the running stages finish
+                    error = error or e
+                    continue
+                if on_done is not None:
+                    on_done(name, done[name])
+    if error is not None:
+        raise error
+    return {name: done[name] for name in order}
 
 
 def run_pipeline(
@@ -68,170 +134,116 @@ def run_pipeline(
     stop_after: str | None = None,
     verbose: bool = True,
 ):
-    """Run (or resume) every stage; returns {stage: StageResult}.
-    `stop_after` returns right after the named stage — the crash-resume
-    tests use it to prove later runs skip completed shuffle stages."""
+    """Run (or resume) every stage; returns {stage: StageResult} in
+    declared order, plus "_log" when the whole plan ran.
+    `stop_after` runs only the declared-order prefix up to and including
+    the named stage — the crash-resume tests use it to prove later runs
+    skip completed shuffle stages. An unknown name raises ValueError
+    before any stage runs."""
     zooms = zooms or list(range(0, 9))
     wm = tms().lookup("WebMercatorQuad")
     log = LineageLog(spark, out)
-    results = {}
+    deep = max(zooms)
+    # each stage's output as downstream stages read it, set once the
+    # stage completes
+    outputs = {}
 
-    def report(name, r):
-        results[name] = r
-        if verbose:
-            print(f"[{name}] ran={r.ran_units} skipped={r.skipped_units} rows={r.rows}")
-        return stop_after == name
+    def stage(name, inputs, units, build, publish=None):
+        """A stage table row. Its fn runs `name`'s units resumably, then
+        reads unit `publish` back for the stages that list `name` as an
+        input. A stage with no units is not in this run's plan."""
+
+        def fn():
+            r = run_stage(spark, log, name, units, build)
+            if publish is not None:
+                outputs[name] = spark.read.parquet(os.path.join(out, name, f"unit={publish}"))
+            return r
+
+        return name, tuple(inputs), fn if units else None
 
     # ---- ingest ----
-    images_path = os.path.join(out, "ingest", "unit=images")
-
     def build_images(_unit: str):
         if images_in:
             return spark.read.parquet(images_in)
         return generate_images(spark, rows, seed=seed)
 
-    r = run_stage(spark, log, "ingest", ["images"], build_images)
-    if report("ingest", r):
-        return results
-    images = spark.read.parquet(images_path)
-
     # ---- assign (unit per zoom) ----
     def build_assign(unit: str):
         z = int(unit)
-        out_df = G.with_tile(images.select("image_id", "lon", "lat"), wm, z)
+        out_df = G.with_tile(outputs["ingest"].select("image_id", "lon", "lat"), wm, z)
         return (
             out_df.withColumn("zoom", F.lit(z))
             .repartitionByRange(max(spark.sparkContext.defaultParallelism, 8), "tile_x", "tile_y")
             .sortWithinPartitions("tile_x", "tile_y")
         )
 
-    r = run_stage(spark, log, "assign", [str(z) for z in zooms], build_assign)
-    if report("assign", r):
-        return results
-
     # ---- stats (salted per-tile aggregate over the deepest zoom) ----
-    deep = max(zooms)
-    assigned = spark.read.parquet(os.path.join(out, "assign", f"unit={deep}"))
-
     def build_stats(_unit: str):
-        counts = measure_tile_skew(assigned.withColumn("zoom", F.lit(deep)))
+        assigned = outputs["assign"].withColumn("zoom", F.lit(deep))
+        counts = measure_tile_skew(assigned)
         if verbose:
             print("[stats] skew profile:", skew_stats(counts))
         return salted_tile_agg(
-            assigned.withColumn("zoom", F.lit(deep)),
+            assigned,
             {"n_images": (F.count("*"), F.sum("n_images"))},
             counts=counts,
             target_rows_per_task=1_000_000,
             id_col="image_id",
         )
 
-    r = run_stage(spark, log, "stats", [f"z{deep}"], build_stats)
-    if report("stats", r):
-        return results
-
     # ---- hotspot (Gi* significance layer over the deep-zoom tiles) ----
     def build_hotspot(_unit: str):
-        from tile_grid_spark.operators.hotspot import getis_ord_gi_star
-
-        return getis_ord_gi_star(images.select("lon", "lat"), wm, deep)
-
-    r = run_stage(spark, log, "hotspot", [f"z{deep}"], build_hotspot)
-    if report("hotspot", r):
-        return results
+        return getis_ord_gi_star(outputs["ingest"].select("lon", "lat"), wm, deep)
 
     # ---- pyramid (cascading rollup of the per-tile stats) ----
-    from tile_grid_spark.operators.rollup import tile_pyramid
-
     coarser = sorted({z for z in zooms if z < deep}, reverse=True)[:3]
 
     def build_pyramid(_unit: str):
-        base = spark.read.parquet(
-            os.path.join(out, "stats", f"unit=z{deep}")
-        ).select("tile_x", "tile_y", "n_images")
+        base = outputs["stats"].select("tile_x", "tile_y", "n_images")
         return tile_pyramid(base, deep, coarser, {"n_images": F.sum("n_images")})
 
-    if coarser:
-        r = run_stage(spark, log, "pyramid", [f"z{deep}->z{min(coarser)}"], build_pyramid)
-        if report("pyramid", r):
-            return results
-
     # ---- distinct-capture sketch (mergeable HLL per tile) ----
-    from tile_grid_spark.operators.sketches import tile_hll_sketches
-
     def build_sketches(_unit: str):
-        t = assigned.withColumn("zoom", F.lit(deep))
+        t = outputs["assign"].withColumn("zoom", F.lit(deep))
         sk = tile_hll_sketches(t, "image_id", keys=("zoom", "tile_x", "tile_y"))
         return sk.select(
             "zoom", "tile_x", "tile_y",
             F.hll_sketch_estimate("sketch").alias("n_distinct_est"),
         )
 
-    r = run_stage(spark, log, "sketches", [f"z{deep}"], build_sketches)
-    if report("sketches", r):
-        return results
-
     # ---- polys (second input table for the multi-input join stage) ----
-    from tile_grid_spark.operators.pip_join import generate_polygons, pip_join
-
     def build_polys(_unit: str):
         return generate_polygons(spark, n_polys, seed=seed + 1)
-
-    r = run_stage(spark, log, "polys", ["layer"], build_polys)
-    if report("polys", r):
-        return results
 
     # ---- pip (shuffle-bearing, multi-input: ingest output x polys output) ----
     pip_zoom = min(deep, 8)
 
     def build_pip(_unit: str):
-        polys = spark.read.parquet(os.path.join(out, "polys", "unit=layer"))
-        pts = images.select("image_id", "lon", "lat")
+        pts = outputs["ingest"].select("image_id", "lon", "lat")
         # broadcast_polys=False: the tile-key SHUFFLE join path (rings
         # re-attached by poly_id after the narrow prefilter) — resume must
         # be proven on the plan shape that runs at 100 TB, not only on
         # narrow map-side stages
-        return pip_join(pts, polys, wm, pip_zoom, broadcast_polys=False)
-
-    r = run_stage(spark, log, "pip", [f"z{pip_zoom}"], build_pip)
-    if report("pip", r):
-        return results
+        return pip_join(pts, outputs["polys"], wm, pip_zoom, broadcast_polys=False)
 
     # ---- dedup (banded-shuffle caption near-dups) ----
-    from tile_grid_spark.operators.dedup import minhash_lsh_pairs
-
     def build_dedup(_unit: str):
-        docs = images.select(
+        docs = outputs["ingest"].select(
             F.col("image_id").alias("doc_id"), F.col("caption").alias("text")
         )
         return minhash_lsh_pairs(docs, k=16, bands=8, jaccard_threshold=0.4)
 
-    r = run_stage(spark, log, "dedup", ["captions"], build_dedup)
-    if report("dedup", r):
-        return results
-
     # ---- cluster (pairs -> components -> keep-one mapping) ----
-    from tile_grid_spark.operators.cluster import connected_components
-
     def build_cluster(_unit: str):
-        pairs = spark.read.parquet(os.path.join(log.root, "dedup", "unit=captions"))
-        nodes = images.select(F.col("image_id").alias("id"))
-        comp = connected_components(pairs, "id_a", "id_b", nodes=nodes)
+        nodes = outputs["ingest"].select(F.col("image_id").alias("id"))
+        comp = connected_components(outputs["dedup"], "id_a", "id_b", nodes=nodes)
         # the dedup verdict: keep component representatives only
         return comp.withColumn("keep", F.col("node") == F.col("component"))
 
-    r = run_stage(spark, log, "cluster", ["components"], build_cluster)
-    if report("cluster", r):
-        return results
-
     # ---- export (dedup verdicts -> stratified sample -> training shards) ----
-    from tile_grid_spark.operators.sample import stratified_sample
-    from tile_grid_spark.sources.io import write_training_shards
-
     def build_export(_unit: str):
-        keep = spark.read.parquet(
-            os.path.join(log.root, "cluster", "unit=components")
-        ).filter(F.col("keep"))
-        corpus = images.join(
+        keep = outputs["cluster"].filter(F.col("keep"))
+        corpus = outputs["ingest"].join(
             keep.select(F.col("node").alias("image_id")), "image_id"
         )
         # caption-length strata: keep every long-caption image, half of
@@ -259,33 +271,21 @@ def run_pipeline(
             "shard INT, n_rows BIGINT, fingerprint STRING",
         )
 
-    r = run_stage(spark, log, "export", ["shards"], build_export)
-    if report("export", r):
-        return results
-
     # ---- raster (point density + image-footprint coverage units) ----
     rz = raster_zoom if raster_zoom is not None else min(deep, 6)
 
     def build_raster(unit: str):
         if unit.startswith("fp-"):
-            from tile_grid_spark.operators.raster import rasterize_footprints
-
-            return rasterize_footprints(images, wm, rz, ground_px_m=100.0)
-        return rasterize_points(images, wm, rz)
-
-    r = run_stage(spark, log, "raster", [f"z{rz}", f"fp-z{rz}"], build_raster)
-    if report("raster", r):
-        return results
+            return rasterize_footprints(outputs["ingest"], wm, rz, ground_px_m=100.0)
+        return rasterize_points(outputs["ingest"], wm, rz)
 
     # ---- mvt (vector-tile payload export: the served artifact) ----
     def build_mvt(unit: str):
-        from tile_grid_spark.operators.vector_tiles import encode_point_tiles
-
         # MVT feature ids are u64 in the spec; image_id is "img-%012d"
         # (datagen.py:113), so the numeric suffix is the natural fid.
         # Format + caption length ride along as tag-dictionary attrs.
         return encode_point_tiles(
-            images.select(
+            outputs["ingest"].select(
                 F.substring("image_id", 5, 12).cast("bigint").alias("pid"),
                 F.col("lon"),
                 F.col("lat"),
@@ -297,23 +297,42 @@ def run_pipeline(
             attr_cols=("fmt", "caption_len"),
         )
 
-    r = run_stage(spark, log, "mvt", [f"z{rz}"], build_mvt)
-    if report("mvt", r):
-        return results
-
     # ---- mvt_pyramid (serve the upper zooms from the child binaries) ----
     def build_mvt_pyramid(unit: str):
-        from tile_grid_spark.operators.vector_tiles import rollup_point_tiles
+        return rollup_point_tiles(outputs["mvt"], levels=rz - int(unit[1:]))
 
-        levels = rz - int(unit[1:])
-        base = spark.read.parquet(os.path.join(out, "mvt", f"unit=z{rz}"))
-        return rollup_point_tiles(base, levels=levels)
+    table = [
+        stage("ingest", [], ["images"], build_images, publish="images"),
+        stage("assign", ["ingest"], [str(z) for z in zooms], build_assign, publish=deep),
+        stage("stats", ["assign"], [f"z{deep}"], build_stats, publish=f"z{deep}"),
+        stage("hotspot", ["ingest"], [f"z{deep}"], build_hotspot),
+        stage("pyramid", ["stats"], [f"z{deep}->z{min(coarser)}"] if coarser else [],
+              build_pyramid),
+        stage("sketches", ["assign"], [f"z{deep}"], build_sketches),
+        stage("polys", [], ["layer"], build_polys, publish="layer"),
+        stage("pip", ["ingest", "polys"], [f"z{pip_zoom}"], build_pip),
+        stage("dedup", ["ingest"], ["captions"], build_dedup, publish="captions"),
+        stage("cluster", ["ingest", "dedup"], ["components"], build_cluster,
+              publish="components"),
+        stage("export", ["ingest", "cluster"], ["shards"], build_export),
+        stage("raster", ["ingest"], [f"z{rz}", f"fp-z{rz}"], build_raster),
+        stage("mvt", ["ingest"], [f"z{rz}"], build_mvt, publish=f"z{rz}"),
+        stage("mvt_pyramid", ["mvt"], [f"z{z}" for z in range(max(rz - 3, 0), rz)],
+              build_mvt_pyramid),
+    ]
+    names = [name for name, _, _ in table]
+    if stop_after is not None:
+        if stop_after not in names:
+            raise ValueError(f"stop_after={stop_after!r} is not a stage; stages: {names}")
+        table = table[: names.index(stop_after) + 1]
 
-    up_units = [f"z{z}" for z in range(max(rz - 3, 0), rz)]
-    if up_units:
-        r = run_stage(spark, log, "mvt_pyramid", up_units, build_mvt_pyramid)
-        report("mvt_pyramid", r)
-    results["_log"] = log
+    def report(name, r):
+        if verbose:
+            print(f"[{name}] ran={r.ran_units} skipped={r.skipped_units} rows={r.rows}")
+
+    results = run_dag(spark, [s for s in table if s[2] is not None], on_done=report)
+    if len(table) == len(names):
+        results["_log"] = log
     return results
 
 
