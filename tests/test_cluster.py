@@ -29,6 +29,19 @@ def _union_find(n_edges, nodes=()):
     return {x: find(x) for x in parent}
 
 
+def _padded_df(spark, edges):
+    """The same edge list with ids as zero-padded STRINGs: the string
+    order equals the numeric order, so the component min is the same
+    node — but a non-integral id skips pre-contraction."""
+    return spark.createDataFrame(
+        [("%06d" % a, "%06d" % b) for a, b in edges], "id_a STRING, id_b STRING"
+    )
+
+
+def _labels(out):
+    return {int(r.node): int(r.component) for r in out.collect()}
+
+
 def _run(spark, edges, nodes=None):
     e = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges] or [(0, 0)], "id_a BIGINT, id_b BIGINT"
@@ -123,8 +136,10 @@ class TestConnectedComponents:
 
 class TestStarImplEquivalence:
     def test_window_equals_agg_on_random_graphs(self, spark):
-        """Both star implementations must produce identical components
-        on random graphs (incl. chains and hub stars mixed in)."""
+        """The window-shaped star rounds label random graphs (incl.
+        chains and hub stars mixed in) like the union-find oracle, both
+        after pre-contraction (BIGINT ids) and on the plain path (the
+        same graph with zero-padded STRING ids)."""
         rng = np.random.default_rng(23)
         n = 200
         edges = [tuple(sorted(p)) for p in rng.integers(0, n, (160, 2)) if p[0] != p[1]]
@@ -133,24 +148,15 @@ class TestStarImplEquivalence:
         e = spark.createDataFrame(
             [(int(a), int(b)) for a, b in edges], "id_a BIGINT, id_b BIGINT"
         )
-        w = {
-            r.node: r.component
-            for r in connected_components(e, star_impl="window").collect()
-        }
-        a = {
-            r.node: r.component
-            for r in connected_components(e, star_impl="agg").collect()
-        }
-        assert w == a == _union_find(edges)
-
-    def test_bad_impl_raises(self, spark):
-        e = spark.createDataFrame([(1, 2)], "id_a BIGINT, id_b BIGINT")
-        with pytest.raises(ValueError, match="star_impl"):
-            connected_components(e, star_impl="nope")
+        w = _labels(connected_components(e))
+        s = _labels(connected_components(_padded_df(spark, edges)))
+        assert w == s == _union_find(edges)
 
 
 class TestPreContraction:
     def test_pre_contract_equals_plain_on_random_graphs(self, spark):
+        """BIGINT ids (pre-contracted) and the same graph as zero-padded
+        STRING ids (plain star rounds) give the union-find labels."""
         rng = np.random.default_rng(23)
         for trial in range(3):
             n = 200 + trial * 100
@@ -160,15 +166,32 @@ class TestPreContraction:
                 if p[0] != p[1]
             ]
             e = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT").repartition(7)
-            a = {
-                r.node: r.component
-                for r in connected_components(e, pre_contract=True).collect()
-            }
-            b = {
-                r.node: r.component
-                for r in connected_components(e, pre_contract=False).collect()
-            }
+            a = _labels(connected_components(e))
+            b = _labels(connected_components(_padded_df(spark, edges).repartition(7)))
             assert a == b == _union_find(edges)
+
+    def test_id_dtype_selects_pre_contraction(self, spark, monkeypatch):
+        """Integral ids are pre-contracted exactly once; any other id
+        type goes straight to star rounds — same labels either way."""
+        import tile_grid_spark.operators.cluster as C
+
+        calls = []
+        real = C._contract_partitions
+
+        def counting(e):
+            calls.append(1)
+            return real(e)
+
+        monkeypatch.setattr(C, "_contract_partitions", counting)
+        edges = [(i, i + 1) for i in range(0, 40)] + [(50, 60), (60, 55), (70, 71)]
+        e = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT").repartition(4)
+        got = _labels(connected_components(e))
+        assert len(calls) == 1
+        assert got == _union_find(edges)
+        calls.clear()
+        got = _labels(connected_components(_padded_df(spark, edges).repartition(4)))
+        assert len(calls) == 0
+        assert got == _union_find(edges)
 
     def test_contract_partitions_preserves_components_and_shrinks(self, spark):
         from tile_grid_spark.operators.cluster import _contract_partitions

@@ -145,14 +145,13 @@ def test_kmeans_iters_zero_uses_seed_centroids(spark, data):
     assert got == want
 
 
-@pytest.mark.parametrize("impl", ["arrow", "join", "blas"])
-def test_semdedup_matches_python_oracle(spark, data, impl):
+def test_semdedup_matches_python_oracle(spark, data):
     ids, X = data
     eps = 0.95
     lab, q = _py_kmeans(ids, X, k=5, iters=2)
     want = _py_semdedup(ids, q, lab, eps)
     assigned = kmeans_assign(_mk_df(spark, ids, X), k=5, dim=DIM, iters=2)
-    rows = semdedup(assigned, eps=eps, impl=impl).collect()
+    rows = semdedup(assigned, eps=eps).collect()
     got = {r["vec_id"]: r["n_earlier_dups"] for r in rows}
     assert got == want
     # planted dups (later id of each pair, same cluster) are dropped
@@ -189,23 +188,6 @@ def test_kmeans_validation(spark, data):
         kmeans_assign(df, k=0, dim=DIM)
     with pytest.raises(ValueError):
         kmeans_assign(df, k=2, dim=DIM, iters=-1)
-    with pytest.raises(ValueError, match="impl"):
-        semdedup(kmeans_assign(df, k=2, dim=DIM, iters=0), eps=0.9, impl="nope")
-
-
-def test_semdedup_impls_agree(spark, data):
-    """arrow (vectorized) and join (relational) prunes are bit-twins:
-    identical rows including every n_earlier_dups count. blas (GEMM)
-    agrees too on this fixture — its cosines may differ in the last
-    ulp, but no fixture pair sits on the eps boundary (planted dups
-    are ~1.0, background pairs < 0.6)."""
-    ids, X = data
-    assigned = kmeans_assign(_mk_df(spark, ids, X), k=4, dim=DIM, iters=1)
-    ra = sorted(map(tuple, semdedup(assigned, eps=0.95, impl="arrow").collect()))
-    rj = sorted(map(tuple, semdedup(assigned, eps=0.95, impl="join").collect()))
-    rb = sorted(map(tuple, semdedup(assigned, eps=0.95, impl="blas").collect()))
-    assert ra == rj
-    assert ra == rb
 
 
 def test_quantize_is_round_half_up(spark):

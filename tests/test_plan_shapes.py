@@ -180,9 +180,9 @@ class TestPlanShapes:
 
     def test_brute_force_topk_uses_window_group_limit(self, spark):
         """The rank<=k filter must push a per-partition top-k below the
-        window exchange (WindowGroupLimit) — without it every (query,
-        cand) pair rides the shuffle."""
-        from tile_grid_spark.operators.similarity import brute_force_topk
+        window exchange (WindowGroupLimit) — without it every batch's
+        local top-k rides the shuffle whole."""
+        from tile_grid_spark.operators.similarity import brute_force_topk_arrow
 
         emb = F.transform(
             F.sequence(F.lit(0), F.lit(7)),
@@ -190,7 +190,7 @@ class TestPlanShapes:
         )
         q = spark.range(4).select(F.col("id").alias("query_id"), emb.alias("embedding"))
         c = spark.range(1000).select(F.col("id").alias("cand_id"), emb.alias("embedding"))
-        out = brute_force_topk(q, c, k=3)
+        out = brute_force_topk_arrow(q, c, k=3)
         plan = plan_of(out)
         assert "WindowGroupLimit" in plan, plan
 
@@ -302,18 +302,14 @@ class TestRound3PlanShapes:
         assert "Exchange" not in plan, plan
 
     def test_connected_components_star_round_shapes(self, spark):
-        """Both star implementations keep their load-bearing plan shape:
-        the agg fallback partial-aggregates its min map-side (hub skew
-        protection: the hot key receives one row per map task), and the
-        default window shape does the whole step in ONE exchange (the
-        1.8x win — star rounds are pure shuffle)."""
-        from tile_grid_spark.operators.cluster import _large_star, _large_star_agg
+        """The window-shaped star step keeps its load-bearing plan
+        shape: the whole step in ONE exchange (the 1.8x win — star
+        rounds are pure shuffle)."""
+        from tile_grid_spark.operators.cluster import _large_star
 
         e = spark.range(0, 1000).select(
             (F.col("id") % 97).alias("u"), F.col("id").alias("v")
         )
-        agg_plan = plan_of(_large_star_agg(e))
-        assert "partial_min" in agg_plan, agg_plan
         win_plan = plan_of(_large_star(e))
         final = win_plan.split("== Initial Plan ==")[0]
         assert final.count("Exchange hashpartitioning") == 1, final

@@ -568,12 +568,6 @@ def geohash_str_from_code(code, precision: int = 9):
     return F.concat(*chars)
 
 
-def geohash_str_col(lon, lat, precision: int = 9):
-    """Native-Column base32 geohash string (no UDF); for hot paths
-    materialize geohash_code_col first and use geohash_str_from_code."""
-    return geohash_str_from_code(geohash_code_col(lon, lat, precision), precision)
-
-
 def _geohash_dims(precision: int) -> tuple[int, int, int]:
     nbits = 5 * precision
     return nbits, (nbits + 1) // 2, nbits // 2

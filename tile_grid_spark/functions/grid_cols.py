@@ -19,7 +19,7 @@ from __future__ import annotations
 import math
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.model import SEMI_MAJOR_METRE
@@ -159,30 +159,6 @@ def with_tile_xy(
     p = tms.zoom_params(zoom)
     return df.withColumns(
         {out_x: xy_tile_x(_col(x), p), out_y: xy_tile_y(_col(y), p)}
-    )
-
-
-def legacy_ytile_from_xyz(grid, zoom: int, tile_y: ColumnOrName = "tile_y") -> Column:
-    """XYZ->TMS row flip with u32-saturating subtraction
-    (/root/reference/src/wmts/grid.rs:224-229) as a Column."""
-    maxy = grid.level_max_list[zoom][1]
-    ty = _col(tile_y)
-    return F.greatest(F.greatest(F.lit(maxy) - ty, F.lit(0)) - F.lit(1), F.lit(0))
-
-
-def zoom_params_df(spark: SparkSession, tms: Tms, zooms: Sequence[int]) -> DataFrame:
-    """Tiny per-zoom parameter table (broadcast side of multi-zoom assignment)."""
-    rows = []
-    for z in zooms:
-        p = tms.zoom_params(z)
-        rows.append(
-            (z, p.resolution, p.origin_x, p.origin_y,
-             p.tile_width, p.tile_height, p.matrix_width, p.matrix_height)
-        )
-    return spark.createDataFrame(
-        rows,
-        "zoom INT, res DOUBLE, origin_x DOUBLE, origin_y DOUBLE, "
-        "tile_w INT, tile_h INT, matrix_w BIGINT, matrix_h BIGINT",
     )
 
 

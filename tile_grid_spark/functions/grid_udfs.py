@@ -86,21 +86,6 @@ def quadkey_udf(tms: Tms):
     return f
 
 
-def s2_token_udf(level: int):
-    """Hex token of the S2 cell id (cell id >> trailing zeros, hex) —
-    convenient stable string id for cross-system exchange."""
-    from .cells import s2_cell_id
-
-    @F.pandas_udf(StringType())
-    def f(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        import numpy as np
-
-        ids = np.asarray(s2_cell_id(lon.to_numpy(), lat.to_numpy(), level)).view("uint64")
-        return pd.Series([format(int(v), "016x").rstrip("0") for v in ids])
-
-    return f
-
-
 def cover_limits_udf(tms: Tms, zoom: int):
     """Geographic bbox -> inclusive tile-range struct (extent_limits
     semantics at one zoom, numpy-exact). Explode downstream with

@@ -230,9 +230,3 @@ def image_pixel_stats(
         "sum_r BIGINT, sum_g BIGINT, sum_b BIGINT"
     )
     return src.mapInPandas(run, schema)
-
-
-def hamming64(a, b):
-    """Column expr: Hamming distance between two 64-bit phash columns
-    (native bit_count — used by near-dup detection)."""
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))

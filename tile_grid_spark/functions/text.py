@@ -315,13 +315,6 @@ def compression_ratio_udf():
     return f
 
 
-def fingerprint_md5(text: Column | str, prefix_chars: int | None = None) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    if prefix_chars is not None:
-        c = F.substring(c, 1, prefix_chars)
-    return F.md5(c)
-
-
 def word_shingles(text: Column | str, n: int = 3) -> Column:
     """Array of n-word shingles (native transform over a token slice).
 

@@ -23,13 +23,10 @@ Scale notes:
 - Skew: a huge star component concentrates on its min-id root node.
   large-star is exactly the paper's fix — high-degree hubs hand their
   GREATER neighbors to the component min without routing everything
-  through one reducer chain. Two interchangeable star implementations
-  (property-tested equal): the default window shape does each star step
-  in ONE edge-list exchange (measured 1.8x faster end to end — star
-  rounds are pure shuffle, exchanges are the cost) but sorts a node's
-  whole adjacency into one task; star_impl="agg" keeps the groupBy-min
-  (map-side partial agg, one row per hot key per map task) + AQE-skew-
-  splittable join for adversarial degree distributions.
+  through one reducer chain. Each star step is window-shaped: ONE
+  edge-list exchange (measured 1.8x faster end to end than a groupBy-min
+  + join-back shape — star rounds are pure shuffle, exchanges are the
+  cost), at the price of sorting a node's whole adjacency into one task.
 - Lineage: each round localCheckpoints the edge set (iterative plans
   otherwise nest and re-execute; same gotcha as knn ring escalation).
 - Convergence test is a checksum (count + sum of xxhash64 over
@@ -54,45 +51,16 @@ def _canonical(e: DataFrame) -> DataFrame:
     )
 
 
-def _large_star_agg(e: DataFrame) -> DataFrame:
-    """Attach every strictly-greater neighbor of u to min(N(u) + {u}).
-
-    groupBy-min + join shape: two edge-list exchanges per step, but the
-    min is partially aggregated map-side (hub nodes receive one row per
-    map task) and the join back is a sort-merge join AQE can skew-split
-    — the shape to pick when single components reach adjacency lists
-    too large for one task (degree ~> 10^8)."""
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = sym.groupBy("u").agg(F.min("v").alias("_mn"))
-    mins = mins.select("u", F.least("u", "_mn").alias("m"))
-    return (
-        sym.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-
-
-def _small_star_agg(e: DataFrame) -> DataFrame:
-    """Attach every lesser-or-equal neighbor of u (and u) to their min."""
-    o = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-    mins = o.groupBy("u").agg(F.min("v").alias("m"))
-    return (
-        o.join(mins, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .unionByName(mins.select("u", F.col("m").alias("v")))
-    )
-
-
 def _large_star(e: DataFrame) -> DataFrame:
-    """Window-shaped large-star: min(N(u) + {u}) as a whole-partition
-    window min — ONE edge-list exchange per step instead of the agg
-    shape's groupBy + join-back two (measured 1.8x on the 1M-node bench
-    graph; a star round is nothing but shuffles, so exchanges ARE the
-    cost). Trade-off: a node's full adjacency sorts into one task, so
-    per-node degree must fit a task (~10^8 rows) — true for banded
-    dedup graphs (candidate generation caps bucket sizes upstream) and
-    after round one (large-star flattens hubs); `star_impl="agg"`
-    remains the AQE-skew-splittable fallback."""
+    """Attach every strictly-greater neighbor of u to min(N(u) + {u}),
+    with the min as a whole-partition window min — ONE edge-list
+    exchange per step instead of a groupBy + join-back two (measured
+    1.8x on the 1M-node bench graph; a star round is nothing but
+    shuffles, so exchanges ARE the cost). Trade-off: a node's full
+    adjacency sorts into one task, so per-node degree must fit a task
+    (~10^8 rows) — true for banded dedup graphs (candidate generation
+    caps bucket sizes upstream) and after round one (large-star
+    flattens hubs)."""
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     w = Window.partitionBy("u")
     m = F.least(F.col("u"), F.min("v").over(w))
@@ -104,11 +72,12 @@ def _large_star(e: DataFrame) -> DataFrame:
 
 
 def _small_star(e: DataFrame) -> DataFrame:
-    """Window-shaped small-star: one ordered window computes both the
-    partition min (full frame) and rn==1 (the per-u emission of
-    (u, min)), so the whole step is one exchange + one sort; the two
-    output families leave via a 2-element explode instead of a union of
-    two reads (a union would re-shuffle the frame twice)."""
+    """Attach every lesser-or-equal neighbor of u (and u) to their min.
+    One ordered window computes both the partition min (full frame) and
+    rn==1 (the per-u emission of (u, min)), so the whole step is one
+    exchange + one sort; the two output families leave via a 2-element
+    explode instead of a union of two reads (a union would re-shuffle
+    the frame twice)."""
     o = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
     ws = Window.partitionBy("u").orderBy("v")
     full = ws.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -199,8 +168,6 @@ def _contract_partitions(e: DataFrame) -> DataFrame:
 def _star_rounds(
     e: DataFrame,
     prev: tuple[int, int],
-    large,
-    small,
     max_iter: int,
 ) -> tuple[DataFrame, tuple[int, int]]:
     """Alternating large/small star rounds until the canonical edge-set
@@ -210,7 +177,7 @@ def _star_rounds(
     for _ in range(max_iter):
         if converged:
             return e, prev
-        e, cur = _checkpoint_with_checksum(_canonical(small(large(e))))
+        e, cur = _checkpoint_with_checksum(_canonical(_small_star(_large_star(e))))
         converged = cur == prev
         prev = cur
     if not converged:
@@ -224,8 +191,6 @@ def _star_rounds(
 def _solve_frontier(
     E: DataFrame,
     prev: tuple[int, int],
-    large,
-    small,
     max_iter: int,
     frontier_max_nodes: int,
 ) -> tuple[DataFrame, tuple[int, int], bool]:
@@ -295,7 +260,7 @@ def _solve_frontier(
         # the guard already passed — no second endpoint pass needed.
         return E, prev, True
     if n_frontier > frontier_max_nodes:
-        return (*_star_rounds(E, prev, large, small, max_iter), False)
+        return (*_star_rounds(E, prev, max_iter), False)
     su = F.broadcast(S.select(F.col("n").alias("_fn"), F.lit(True).alias("_fu")))
     sv = F.broadcast(S.select(F.col("n").alias("_gn"), F.lit(True).alias("_fv")))
     flagged = (
@@ -335,7 +300,7 @@ def _solve_frontier(
         )
     else:
         f, fprev = _checkpoint_with_checksum(fe)
-        f, fprev = _star_rounds(f, fprev, large, small, max_iter)
+        f, fprev = _star_rounds(f, fprev, max_iter)
     remap = F.broadcast(f.select(F.col("v").alias("_rn"), F.col("u").alias("_rr")))
     final = f.unionByName(
         settled.join(remap, settled["u"] == remap["_rn"], "left").select(
@@ -401,8 +366,6 @@ def connected_components(
     dst: str = "id_b",
     nodes: DataFrame | None = None,
     max_iter: int = 30,
-    star_impl: str = "window",
-    pre_contract: bool = True,
     frontier_max_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Connected components of the undirected graph given by `edges`.
@@ -417,20 +380,15 @@ def connected_components(
     the star rounds have not converged after `max_iter` (the paper's
     bound is O(log^2 n) w.h.p.; 30 covers any realistic corpus).
 
-    `star_impl`: "window" (default — one exchange per star step,
-    measured 1.8x faster; per-node adjacency must fit one task) or
-    "agg" (groupBy+join — map-side partial min + AQE-splittable join
-    for adversarial hub degrees). Identical results, property-tested.
-
-    `pre_contract` (default True): contract each partition's edges with
-    a local union-find before any shuffle (_contract_partitions) —
+    Integral id columns are first contracted per partition with a
+    local union-find before any shuffle (_contract_partitions) —
     strictly fewer edges enter the star rounds and chains local to a
-    partition collapse immediately. Only applies to integral id
-    columns (the factorized numpy union-find needs int64); any other
-    type silently keeps the plain path. Identical results,
+    partition collapse immediately. The factorized numpy union-find
+    needs int64, so any other id type (e.g. the pipeline's STRING
+    image ids) goes straight to global star rounds. Identical results,
     property-tested.
 
-    `frontier_max_nodes` (default 2M; 0 disables): with pre_contract,
+    `frontier_max_nodes` (default 2M; 0 disables): after contraction,
     a node seen by exactly ONE partition had its whole neighborhood
     contracted locally — its star is globally final. Global star rounds
     therefore only need the edges touching the cross-partition frontier
@@ -444,17 +402,11 @@ def connected_components(
     property-tested, and the post-convergence star-forest +
     child-uniqueness guards verify the construction at runtime.
     """
-    if star_impl == "window":
-        large, small = _large_star, _small_star
-    elif star_impl == "agg":
-        large, small = _large_star_agg, _small_star_agg
-    else:
-        raise ValueError(f"star_impl must be 'window' or 'agg', got {star_impl!r}")
     e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     integral = all(
         t in ("tinyint", "smallint", "int", "bigint") for _, t in e0.dtypes
     )
-    if pre_contract and integral:
+    if integral:
         canon0 = e0.select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         ).filter(F.col("u") != F.col("v"))
@@ -470,15 +422,13 @@ def connected_components(
         # definition. Saves one full shuffle of the contracted edges.
         e, prev = _checkpoint_with_checksum(_contract_partitions(canon0))
         if frontier_max_nodes > 0 and prev[0] > 0:
-            e, prev, guarded = _solve_frontier(
-                e, prev, large, small, max_iter, frontier_max_nodes
-            )
+            e, prev, guarded = _solve_frontier(e, prev, max_iter, frontier_max_nodes)
         else:
-            e, prev = _star_rounds(e, prev, large, small, max_iter)
+            e, prev = _star_rounds(e, prev, max_iter)
             guarded = False
     else:
         e, prev = _checkpoint_with_checksum(_canonical(e0))
-        e, prev = _star_rounds(e, prev, large, small, max_iter)
+        e, prev = _star_rounds(e, prev, max_iter)
         guarded = False
     if prev[0] > 0 and not guarded:
         # A checksum fixed point of S∘L (or the distributed frontier

@@ -12,8 +12,6 @@ x-middle, y-fastest) when a test needs it; production plans never sort.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -185,18 +183,6 @@ def cover_bbox_xy_exact(
         .withColumn("zoom", F.lit(zoom))
         .drop("_ulx", "_uly", "_lrx", "_lry")
     )
-
-
-def cover_multizoom(
-    df: DataFrame, tms: Tms, zooms: Sequence[int], geographic: bool = True, **cols
-) -> DataFrame:
-    """Union of per-zoom covers (matches reference per-zoom loop)."""
-    fn = cover_bbox_geographic if geographic else cover_bbox_xy
-    out = None
-    for z in zooms:
-        part = fn(df, tms, z, **cols)
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 def enumerate_legacy(spark, grid, extent, tolerance: int, minzoom: int, maxzoom: int) -> DataFrame:

@@ -66,7 +66,6 @@ def dbscan(
     lon: str = "lon",
     lat: str = "lat",
     zoom: int | None = None,
-    star_impl: str = "window",
 ) -> DataFrame:
     """Cluster `points` (id_col, lon, lat) with DBSCAN(eps meters,
     min_pts). Returns (id_col, cluster, role):
@@ -103,7 +102,7 @@ def dbscan(
         .select("_ida", "_idb")
         .localCheckpoint()  # 3 consumers; never replay the ring join
     )
-    return _label_from_pairs(pts.select(id_col), pairs, min_pts, id_col, star_impl)
+    return _label_from_pairs(pts.select(id_col), pairs, min_pts, id_col)
 
 
 def st_dbscan(
@@ -117,7 +116,6 @@ def st_dbscan(
     lat: str = "lat",
     t_col: str = "t",
     zoom: int | None = None,
-    star_impl: str = "window",
 ) -> DataFrame:
     """Spatio-temporal DBSCAN (Birant & Kut 2007, the common single-
     threshold variant): the eps-neighborhood requires BOTH distance <=
@@ -156,7 +154,7 @@ def st_dbscan(
         .select("_ida", "_idb")
         .localCheckpoint()  # 3 consumers; never replay join+filter
     )
-    return _label_from_pairs(pts.select(id_col), pairs, min_pts, id_col, star_impl)
+    return _label_from_pairs(pts.select(id_col), pairs, min_pts, id_col)
 
 
 def _label_from_pairs(
@@ -164,7 +162,6 @@ def _label_from_pairs(
     pairs: DataFrame,
     min_pts: int,
     id_col: str,
-    star_impl: str,
 ) -> DataFrame:
     """Shared DBSCAN labeling over a checkpointed symmetric neighbor
     pair list (_ida, _idb): degree-threshold cores, CC over core-core
@@ -208,12 +205,7 @@ def _label_from_pairs(
     ).select("_ida", "_idb")
     # no nodes=: isolated cores are handled by the coalesce below, so
     # the CC-internal isolated-vertex anti-join never runs
-    comp = connected_components(
-        core_edges,
-        src="_ida",
-        dst="_idb",
-        star_impl=star_impl,
-    )
+    comp = connected_components(core_edges, src="_ida", dst="_idb")
     cm = comp.select(F.col("node").alias("_cn"), F.col("component").alias("_cc"))
 
     # border candidates: non-core left endpoint, core right endpoint ->

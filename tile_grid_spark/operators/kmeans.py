@@ -50,7 +50,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dedup import md5_hash60
-from .similarity import dot_expr
 
 __all__ = ["quantize_embedding", "kmeans_assign", "semdedup"]
 
@@ -232,7 +231,6 @@ def semdedup(
     eps: float,
     id_col: str = "vec_id",
     max_cluster_rows: int | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """SemDeDup prune over a kmeans_assign() result: within each
     cluster, a row is DROPPED when an earlier row (lower id) of the
@@ -246,30 +244,14 @@ def semdedup(
     at 10^12 rows pick k so clusters stay ~1e4-1e5 (SemDeDup uses
     k ~ sqrt(N)).
 
-    impl="arrow" (default): ONE exchange on the cluster id, then a
-    per-cluster vectorized cosine matrix in applyInPandas — norms once
-    per row, dot accumulation dim-sequential (acc += outer(x_i, x_i)),
-    upper-triangle count per later id. Memory is c_i^2 doubles per
-    group, which is exactly what max_cluster_rows bounds.
-    impl="join": the all-JVM relational twin (cluster equi-join +
-    HOF-fold cosine filter + count). Same bits — HOF folds and the
-    numpy dim-loop share the add order — but the per-pair fold is
-    CodegenFallback (interpreted), so it's the fallback, not the
-    default. Both are oracle-checked (entry query `semdedup`).
-    impl="blas": same Arrow shape but ONE GEMM (X @ X.T) per cluster
-    instead of dim sequential passes — the 100-TB scale path when
-    clusters are large (the dim-loop re-reads the c x c accumulator
-    dim times; GEMM is one cache-blocked pass, measured ~dim/3 x
-    faster at c ~ 4k). NOT bit-exact: BLAS reorders the dim sum, so a
-    cosine can differ from the fold order in the last ulp and a pair
-    sitting exactly ON the eps boundary may flip (same adjudication
-    as the knn brute-force bench path). Use it when eps has slack;
-    use "arrow" when replaying an oracle.
+    Shape: ONE exchange on the cluster id, then a per-cluster
+    vectorized cosine matrix in applyInPandas — norms once per row,
+    dot accumulation dim-sequential (acc += outer(x_i, x_i), the same
+    add order as a left-to-right fold, so the prune replays bit-for-bit
+    in the oracle SQL: entry query `semdedup`), upper-triangle count per
+    later id. Memory is c_i^2 doubles per group, which is exactly what
+    max_cluster_rows bounds.
     """
-    if impl not in ("arrow", "join", "blas"):
-        raise ValueError(
-            f"semdedup: impl must be 'arrow', 'join' or 'blas', got {impl!r}"
-        )
     if max_cluster_rows is not None:
         # capped probe, same pattern as interval_join's broadcast gate:
         # one tiny agg action, raises before any quadratic work
@@ -285,18 +267,6 @@ def semdedup(
                 f"max_cluster_rows={max_cluster_rows}; increase k "
                 "(SemDeDup wants k ~ sqrt(N))"
             )
-    if impl == "join":
-        return _semdedup_join(assigned, eps, id_col)
-    return _semdedup_arrow(assigned, eps, id_col, gemm=(impl == "blas"))
-
-
-def _semdedup_arrow(
-    assigned: DataFrame, eps: float, id_col: str, gemm: bool = False
-) -> DataFrame:
-    """Per-cluster vectorized prune: sort the group by id, build the
-    pairwise dot matrix — dim-sequential outer-product accumulation
-    (bit-identical to the pair fold) by default, one BLAS GEMM when
-    gemm=True — then count i<j hits."""
     eps = float(eps)
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -304,16 +274,12 @@ def _semdedup_arrow(
         ids = pdf[id_col].to_numpy()[order]
         X = np.stack(pdf["qd"].to_numpy()[order])  # (c, dim) float64
         c, dim = X.shape
-        if gemm:
-            acc = X @ X.T
-            nrm2 = np.einsum("ij,ij->i", X, X)
-        else:
-            acc = np.zeros((c, c))
-            nrm2 = np.zeros(c)
-            for i in range(dim):  # dim-sequential: the fold's add order
-                xi = X[:, i]
-                acc += np.multiply.outer(xi, xi)
-                nrm2 += xi * xi
+        acc = np.zeros((c, c))
+        nrm2 = np.zeros(c)
+        for i in range(dim):  # dim-sequential: the fold's add order
+            xi = X[:, i]
+            acc += np.multiply.outer(xi, xi)
+            nrm2 += xi * xi
         nrm = np.sqrt(nrm2)
         cos = acc / np.multiply.outer(nrm, nrm)
         hit = cos >= eps
@@ -336,43 +302,3 @@ def _semdedup_arrow(
         F.transform("q", lambda x: x.cast("double")).alias("qd"),
     )
     return side.groupBy("cluster").applyInPandas(prune, _prune_schema(id_col))
-
-
-def _semdedup_join(assigned: DataFrame, eps: float, id_col: str) -> DataFrame:
-    # norms once per ROW, never per pair (the cosine-join rule)
-    side = assigned.select(
-        F.col(id_col).alias("_id"),
-        "cluster",
-        F.transform("q", lambda x: x.cast("double")).alias("_qd"),
-    ).withColumn("_norm", F.sqrt(dot_expr(F.col("_qd"), F.col("_qd"))))
-    a = side.select(
-        F.col("_id").alias("_ida"),
-        F.col("cluster").alias("_ca"),
-        F.col("_qd").alias("_qa"),
-        F.col("_norm").alias("_na"),
-    )
-    b = side.select(
-        F.col("_id").alias("_idb"),
-        F.col("cluster").alias("_cb"),
-        F.col("_qd").alias("_qb"),
-        F.col("_norm").alias("_nb"),
-    )
-    cos = dot_expr(F.col("_qa"), F.col("_qb")) / (F.col("_na") * F.col("_nb"))
-    dup_counts = (
-        a.join(b, (a["_ca"] == b["_cb"]) & (a["_ida"] < b["_idb"]))
-        .filter(cos >= F.lit(float(eps)))
-        .groupBy(F.col("_idb").alias(id_col))
-        .agg(F.count(F.lit(1)).alias("n_earlier_dups"))
-    )
-    return (
-        assigned.select(id_col, "cluster")
-        .join(dup_counts, id_col, "left")
-        .select(
-            id_col,
-            "cluster",
-            F.coalesce("n_earlier_dups", F.lit(0)).alias("n_earlier_dups"),
-            (F.coalesce("n_earlier_dups", F.lit(0)) == 0)
-            .cast("int")
-            .alias("keep"),
-        )
-    )

@@ -1,7 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k is the exact baseline; the scale paths are
-random-hyperplane LSH buckets and IVF (coarse k-means centroids + nprobe).
+Brute-force cosine top-k (Arrow-batched numpy matmul) is the exact
+baseline; the scale paths are random-hyperplane LSH buckets, IVF (coarse
+k-means centroids + nprobe) and product-quantization ADC.
 
 Scale shape: candidates are bucketed ONCE (narrow projection), queries
 explode to their probe buckets, the join is an equi-join on a short
@@ -40,45 +41,6 @@ def norm_expr(a, dim: int | None = None) -> F.Column:
     return F.sqrt(dot_expr(a, a, dim))
 
 
-def cosine_expr(a, b, dim: int | None = None) -> F.Column:
-    """Exact cosine between two array<double> columns (JVM-side). In a
-    join, prefer precomputing norm_expr per SIDE (once per row, not once
-    per pair) and dividing dot_expr by the product — that is what the
-    operators below do."""
-    return dot_expr(a, b, dim) / (norm_expr(a, dim) * norm_expr(b, dim))
-
-
-def brute_force_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    query_id: str = "query_id",
-    cand_id: str = "cand_id",
-    emb: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Exact cosine top-k: broadcast queries x candidates + window.
-    The baseline every approximate variant is validated against.
-    Norms are computed once per row on each side; only the dot product
-    is per-pair. The rank filter compiles to WindowGroupLimit
-    (per-partition top-k before the shuffle)."""
-    q = queries.select(
-        F.col(query_id), F.transform(emb, lambda x: x.cast("double")).alias("_qe")
-    ).withColumn("_qn", norm_expr("_qe", dim))
-    c = candidates.select(
-        F.col(cand_id), F.transform(emb, lambda x: x.cast("double")).alias("_ce")
-    ).withColumn("_cn", norm_expr("_ce", dim))
-    pairs = c.crossJoin(F.broadcast(q)).withColumn(
-        "cosine", dot_expr("_qe", "_ce", dim) / (F.col("_qn") * F.col("_cn"))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(cand_id))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, "rank", F.round("cosine", 6).alias("cosine"))
-    )
-
-
 def brute_force_topk_arrow(
     queries: DataFrame,
     candidates: DataFrame,
@@ -88,18 +50,17 @@ def brute_force_topk_arrow(
     emb: str = "embedding",
     max_queries: int = 4096,
 ) -> DataFrame:
-    """Exact cosine top-k via Arrow-batched numpy matmul — the BULK
-    scoring path.
+    """Exact cosine top-k via Arrow-batched numpy matmul.
 
-    The JVM brute_force_topk evaluates the HOF fold interpreted per
-    pair (~11k pairs/s/core measured at dim 32); one BLAS matmul per
-    Arrow batch is orders of magnitude faster and is how exact scoring
-    survives 100 TB. Queries (the small side by contract, capped at
-    `max_queries`) collect to a driver matrix and ship in the UDF
-    closure; candidates stream through mapInPandas computing a
-    (batch x queries) similarity block + per-batch local top-k; a tiny
-    global top-k (<= batches*k rows per query) finishes. Ties broken by
-    cand_id ascending, like the JVM path.
+    A per-pair JVM zip_with/aggregate fold scored ~11k pairs/s/core
+    (measured at dim 32); one BLAS matmul per Arrow batch is orders of
+    magnitude faster and is how exact scoring survives 100 TB. Queries
+    (the small side by contract, capped at `max_queries`) collect to a
+    driver matrix and ship in the UDF closure; candidates stream
+    through mapInArrow computing a (batch x queries) similarity block +
+    per-batch local top-k; a tiny global top-k (<= batches*k rows per
+    query) finishes — its rank filter compiles to WindowGroupLimit.
+    Ties broken by cand_id ascending.
     """
     qrows = queries.select(query_id, emb).limit(max_queries + 1).collect()
     if len(qrows) > max_queries:
