@@ -51,6 +51,8 @@ import os
 import sys
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
+import pandas as pd
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
@@ -263,13 +265,17 @@ def run_pipeline(
             id_col="image_id",
             sort_cols=("image_id",),
         )
-        return spark.createDataFrame(
+        # from pandas (Arrow) the manifest is a JVM-side LocalRelation, so
+        # its write starts no Python worker; a list of tuples would go
+        # through a pickled Python RDD
+        rows = pd.DataFrame(
             [
                 (int(s), int(v["rows"]), str(v["fingerprint"]))
                 for s, v in sorted(manifest["shards"].items())
             ],
-            "shard INT, n_rows BIGINT, fingerprint STRING",
+            columns=["shard", "n_rows", "fingerprint"],
         )
+        return spark.createDataFrame(rows, "shard INT, n_rows BIGINT, fingerprint STRING")
 
     # ---- raster (point density + image-footprint coverage units) ----
     rz = raster_zoom if raster_zoom is not None else min(deep, 6)

@@ -32,7 +32,7 @@ def _union_find(n_edges, nodes=()):
 def _padded_df(spark, edges):
     """The same edge list with ids as zero-padded STRINGs: the string
     order equals the numeric order, so the component min is the same
-    node — but a non-integral id skips pre-contraction."""
+    node, and `_labels` reads both id types back as ints."""
     return spark.createDataFrame(
         [("%06d" % a, "%06d" % b) for a, b in edges], "id_a STRING, id_b STRING"
     )
@@ -40,6 +40,12 @@ def _padded_df(spark, edges):
 
 def _labels(out):
     return {int(r.node): int(r.component) for r in out.collect()}
+
+
+def _bigint_df(spark, edges):
+    return spark.createDataFrame(
+        [(int(a), int(b)) for a, b in edges], "id_a BIGINT, id_b BIGINT"
+    )
 
 
 def _run(spark, edges, nodes=None):
@@ -102,8 +108,8 @@ class TestConnectedComponents:
 
     def test_huge_hub_star_skew(self, spark):
         """A 150k-leaf hub at the MAX id: small-star funnels every leaf
-        into the hub's group — partial aggregation must keep the hot key
-        to one row per map task and converge in the star-bound rounds."""
+        into the hub's window partition — the whole hot adjacency sorts
+        into one task and must still converge in the star-bound rounds."""
         n = 150_000
         e = spark.range(0, n - 1).select(
             F.col("id").alias("id_a"), F.lit(n - 1).alias("id_b")
@@ -137,26 +143,22 @@ class TestConnectedComponents:
 class TestStarImplEquivalence:
     def test_window_equals_agg_on_random_graphs(self, spark):
         """The window-shaped star rounds label random graphs (incl.
-        chains and hub stars mixed in) like the union-find oracle, both
-        after pre-contraction (BIGINT ids) and on the plain path (the
-        same graph with zero-padded STRING ids)."""
+        chains and hub stars mixed in) like the union-find oracle, with
+        BIGINT ids and with the same graph as zero-padded STRING ids."""
         rng = np.random.default_rng(23)
         n = 200
         edges = [tuple(sorted(p)) for p in rng.integers(0, n, (160, 2)) if p[0] != p[1]]
         edges += [(i, i + 1) for i in range(100, 140)]  # chain
         edges += [(150, j) for j in range(151, 180)]  # hub star
-        e = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in edges], "id_a BIGINT, id_b BIGINT"
-        )
-        w = _labels(connected_components(e))
+        w = _labels(connected_components(_bigint_df(spark, edges)))
         s = _labels(connected_components(_padded_df(spark, edges)))
         assert w == s == _union_find(edges)
 
 
 class TestPreContraction:
     def test_pre_contract_equals_plain_on_random_graphs(self, spark):
-        """BIGINT ids (pre-contracted) and the same graph as zero-padded
-        STRING ids (plain star rounds) give the union-find labels."""
+        """Pre-contracted BIGINT ids and the same graph as zero-padded
+        STRING ids give the union-find labels."""
         rng = np.random.default_rng(23)
         for trial in range(3):
             n = 200 + trial * 100
@@ -170,9 +172,9 @@ class TestPreContraction:
             b = _labels(connected_components(_padded_df(spark, edges).repartition(7)))
             assert a == b == _union_find(edges)
 
-    def test_id_dtype_selects_pre_contraction(self, spark, monkeypatch):
-        """Integral ids are pre-contracted exactly once; any other id
-        type goes straight to star rounds — same labels either way."""
+    def test_every_id_type_is_pre_contracted(self, spark, monkeypatch):
+        """BIGINT and STRING ids are each pre-contracted exactly once,
+        with the union-find labels; any other id type raises."""
         import tile_grid_spark.operators.cluster as C
 
         calls = []
@@ -184,14 +186,14 @@ class TestPreContraction:
 
         monkeypatch.setattr(C, "_contract_partitions", counting)
         edges = [(i, i + 1) for i in range(0, 40)] + [(50, 60), (60, 55), (70, 71)]
-        e = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT").repartition(4)
-        got = _labels(connected_components(e))
-        assert len(calls) == 1
-        assert got == _union_find(edges)
-        calls.clear()
-        got = _labels(connected_components(_padded_df(spark, edges).repartition(4)))
-        assert len(calls) == 0
-        assert got == _union_find(edges)
+        for make in (_bigint_df, _padded_df):
+            calls.clear()
+            got = _labels(connected_components(make(spark, edges).repartition(4)))
+            assert len(calls) == 1, make
+            assert got == _union_find(edges), make
+        e = spark.createDataFrame([(1.0, 2.0)], "id_a DOUBLE, id_b DOUBLE")
+        with pytest.raises(TypeError, match="DoubleType"):
+            connected_components(e)
 
     def test_contract_partitions_preserves_components_and_shrinks(self, spark):
         from tile_grid_spark.operators.cluster import _contract_partitions
@@ -213,7 +215,7 @@ class TestPreContraction:
         """The frontier quotient solve (default) must label identically
         to full global star rounds (frontier_max_nodes=0) and to the
         union-find oracle — random graphs mix chains, hubs and
-        cross-partition components."""
+        cross-partition components; BIGINT and STRING ids alike."""
         rng = np.random.default_rng(41)
         for parts in (2, 9, 32):
             n = 250
@@ -223,30 +225,49 @@ class TestPreContraction:
                 if p[0] != p[1]
             ]
             edges += [(i, i + 1) for i in range(200, 240)]
-            e = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT").repartition(
-                parts
-            )
-            a = {
-                r.node: r.component
-                for r in connected_components(e).collect()  # frontier default
-            }
-            b = {
-                r.node: r.component
-                for r in connected_components(e, frontier_max_nodes=0).collect()
-            }
-            assert a == b == _union_find(edges)
+            for make in (_bigint_df, _padded_df):
+                e = make(spark, edges).repartition(parts)
+                a = _labels(connected_components(e))  # frontier default
+                b = _labels(connected_components(e, frontier_max_nodes=0))
+                assert a == b == _union_find(edges), (parts, make)
 
     def test_frontier_cap_falls_back_to_global_rounds(self, spark):
-        """frontier_max_nodes smaller than the frontier forces the
-        global-round fallback — identical labels."""
-        edges = [(i, i + 1) for i in range(300)]  # one long chain
-        e = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT").repartition(16)
-        got = {
-            r.node: r.component
-            for r in connected_components(e, frontier_max_nodes=1).collect()
-        }
-        assert got == _union_find(edges)
-        assert set(got.values()) == {0}
+        """frontier_max_nodes=1 forces the star-round tiers: the
+        global-round fallback (a 300-chain: frontier > cap) and the
+        distributed frontier rounds (a 3-chain split over 2 partitions:
+        one frontier node, two frontier edges) — identical labels,
+        BIGINT and STRING ids alike."""
+        chain = [(i, i + 1) for i in range(300)]
+        for make in (_bigint_df, _padded_df):
+            e = make(spark, chain).repartition(16)
+            got = _labels(connected_components(e, frontier_max_nodes=1))
+            assert got == _union_find(chain), make
+            assert set(got.values()) == {0}
+            # one row per partition: (0, 1) and (1, 2) contract apart
+            e = make(spark, [(0, 1), (1, 2)]).coalesce(1).repartition(2)
+            got = _labels(connected_components(e, frontier_max_nodes=1))
+            assert got == {0: 0, 1: 0, 2: 0}, make
+
+    def test_string_min_is_code_point_min(self, spark):
+        """Non-ASCII STRING ids: numpy's code-point sort (union-find in
+        the partitions and on the driver) must agree with Spark's
+        UTF8_BINARY min, so every node's component is Python's `min`
+        over its union-find component, at one and at five partitions."""
+        chains = {c: [f"{c}{i}" for i in range(4)] for c in "Zaßé中😀"}
+        edges = [(p[i], p[i + 1]) for p in chains.values() for i in range(3)]
+        edges += [("中", chains[c][k]) for c in "Zaß" for k in (0, 3)]  # hub
+        edges += [("😀", "é3"), ("a", "😀0"), ("Z", "ß")]
+        # U+FF5A sorts below U+1F600 by code point but above it in UTF-16
+        edges += [("ｚ", "😀9")]
+        want = _union_find(edges)
+        comps = {}
+        for x, r in want.items():
+            comps.setdefault(r, []).append(x)
+        want = {x: min(comps[r]) for x, r in want.items()}
+        for parts in (1, 5):
+            e = spark.createDataFrame(edges, "id_a STRING, id_b STRING").repartition(parts)
+            got = {r.node: r.component for r in connected_components(e).collect()}
+            assert got == want, parts
 
     def test_pre_contract_partition_invariant(self, spark):
         rng = np.random.default_rng(5)

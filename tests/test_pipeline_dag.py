@@ -54,12 +54,27 @@ def unit_dirs(out: str, stage: str) -> list[str]:
 
 @pytest.fixture(scope="module")
 def full_pass(spark, tmp_path_factory):
+    """One uninterrupted pass: its output dir, its results, and the frame
+    each (stage, unit) was built as, captured around run_stage."""
     out = str(tmp_path_factory.mktemp("dag_full"))
-    return out, RP.run_pipeline(spark, out, **ARGS)
+    built = {}
+    run_stage = RP.run_stage
+
+    def capturing(spark, log, stage, units, build_unit, out_root=None):
+        def build(unit):
+            built[(stage, unit)] = build_unit(unit)
+            return built[(stage, unit)]
+
+        return run_stage(spark, log, stage, units, build, out_root)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(RP, "run_stage", capturing)
+        res = RP.run_pipeline(spark, out, **ARGS)
+    return out, res, built
 
 
 def test_stages_start_after_their_inputs_finish(full_pass):
-    out, _ = full_pass
+    out, _, _ = full_pass
     rows = lineage(out)
     first_start = {s: min(r["ts"] - r["wall_sec"] for r in rows if r["stage"] == s)
                    for s in STAGES}
@@ -74,9 +89,18 @@ def test_stages_start_after_their_inputs_finish(full_pass):
 
 
 def test_results_keep_declared_order(full_pass):
-    _, res = full_pass
+    _, res, _ = full_pass
     assert list(res) == STAGES + ["_log"]
     assert all(res[s].ran_units and not res[s].skipped_units for s in STAGES)
+
+
+def test_export_manifest_is_a_local_relation(full_pass):
+    """The export manifest is built from pandas: with Arrow on it is a
+    JVM-side LocalRelation, so its write starts no Python worker (a frame
+    over a pickled Python RDD shows up as a LogicalRDD)."""
+    _, _, built = full_pass
+    plan = built[("export", "shards")]._jdf.queryExecution().analyzed().toString()
+    assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan, plan
 
 
 def test_unknown_stop_after_raises_before_any_stage(spark, tmp_path):
@@ -113,7 +137,7 @@ def test_failed_stage_drains_then_rerun_matches(spark, tmp_path, monkeypatch, fu
         assert [d for d in unit_dirs(out, stage) if d.startswith("unit=")] == [], stage
         assert not any(s == stage for s, _ in logged), stage
     # the stages started beside dedup ran to completion and logged every unit
-    full_out, _ = full_pass
+    full_out, _, _ = full_pass
     full = fingerprints(full_out)
     for stage in ("ingest", "assign", "hotspot", "raster", "mvt"):
         want = {key for key in full if key[0] == stage}
