@@ -886,6 +886,54 @@ class TestMvtStoreRefresh:
         assert feats == {1, 2, 3}
 
 
+class TestStoreSwapRecovery:
+    """A crash between the swap's two renames leaves only `<store>.old`;
+    the replayed batch must merge into it, not rebuild from itself."""
+
+    def test_mvt_store_survives_interrupted_swap(self, spark, tmp_path, wm):
+        from tile_grid_spark.functions.mvt import decode_point_tile
+        from tile_grid_spark.streaming.stream import refresh_mvt_store
+
+        store = str(tmp_path / "mvt_store")
+        schema = "pid BIGINT, lon DOUBLE, lat DOUBLE"
+        refresh_mvt_store(
+            store, spark.createDataFrame([(1, 10.0, 10.0), (2, 100.0, -40.0)], schema), wm, 4
+        )
+        before = {(r.tile_x, r.tile_y): bytes(r.mvt) for r in spark.read.parquet(store).collect()}
+        assert len(before) == 2
+        os.rename(store, store + ".old")  # crash after live -> .old
+        os.makedirs(store + ".tmp")        # ... with a stale .tmp beside it
+        refresh_mvt_store(store, spark.createDataFrame([(3, 10.1, 10.1)], schema), wm, 4)
+        got = {}
+        for r in spark.read.parquet(store).collect():
+            (layer,) = decode_point_tile(bytes(r.mvt))["layers"]
+            got[(r.tile_x, r.tile_y)] = {f[0] for f in layer["features"]}
+        assert set(got) == set(before)
+        assert sorted(f for fs in got.values() for f in fs) == [1, 2, 3]
+        assert not os.path.exists(store + ".old") and not os.path.exists(store + ".tmp")
+
+    def test_tile_store_survives_interrupted_swap(self, spark, tmp_path):
+        from tile_grid_spark.streaming.stream import refresh_tile_store
+
+        store = str(tmp_path / "store")
+        schema = "zoom INT, tile_x BIGINT, tile_y BIGINT, n BIGINT, window_end BIGINT"
+        keys = ("zoom", "tile_x", "tile_y")
+        refresh_tile_store(
+            store, spark.createDataFrame([(8, 1, 1, 10, 100), (8, 1, 2, 20, 100)], schema),
+            keys, "window_end",
+        )
+        os.rename(store, store + ".old")
+        refresh_tile_store(
+            store, spark.createDataFrame([(8, 2, 2, 7, 200)], schema), keys, "window_end"
+        )
+        got = {
+            (r.zoom, r.tile_x, r.tile_y): (r.n, r.window_end)
+            for r in spark.read.parquet(store).collect()
+        }
+        assert got == {(8, 1, 1): (10, 100), (8, 1, 2): (20, 100), (8, 2, 2): (7, 200)}
+        assert not os.path.exists(store + ".old")
+
+
 class TestStreamingStaypoints:
     def test_replay_matches_batch_operator(self, spark, tmp_path):
         """Replaying a finite trajectory fixture through

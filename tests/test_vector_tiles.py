@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import glob
+
 import numpy as np
 import pytest
 
@@ -836,3 +838,191 @@ class TestViewportFetch:
         df = spark.range(1).selectExpr("id as tile_x", "id as tile_y", "1 as n_features")
         with pytest.raises(ValueError, match="lower zoom"):
             tiles_for_viewport(df, wm, -180.0, -85.0, 180.0, 85.0, 12)
+
+
+def _store_bytes(spark, path):
+    return {(r.tile_x, r.tile_y): bytes(r.mvt) for r in spark.read.parquet(path).collect()}
+
+
+class TestUpsertPointTiles:
+    """upsert_point_tiles / refresh_mvt_store: only touched tiles are
+    re-encoded, and the store equals a fresh encode of its points."""
+
+    SCHEMA = "pid BIGINT, lon DOUBLE, lat DOUBLE, seg STRING"
+
+    def _fixture(self, wm):
+        """Six z4 tiles of five points; every seg in tile 2 is null. The
+        batch moves points only within their tile, adds one point to
+        tile 1 and one to a new tile 7: touched {0, 1, 2, 7}."""
+        base = [
+            (t * 10 + k, -168.0 + 22.5 * t + 1.3 * k, 5.0 + 1.1 * k,
+             None if t == 2 else f"s{k % 2}")
+            for t in range(6)
+            for k in range(5)
+        ]
+        batch = [
+            (1, -168.0 + 1.3 + 0.2, 5.0 + 1.1 + 0.3, "moved"),  # tile 0
+            (100, -168.0 + 22.5 + 0.7, 6.0, "new"),              # tile 1
+            (22, -168.0 + 45.0 + 2.6 + 0.4, 5.0 + 2.2, None),    # tile 2, still null
+            (700, -168.0 + 22.5 * 7 + 1.0, 7.0, "far"),          # new tile 7
+        ]
+        tile = {p: wm.tile(x, y, 4) for p, x, y, _ in base}
+        for p, x, y, _ in batch:
+            assert p not in tile or wm.tile(x, y, 4) == tile[p]  # moves stay in-tile
+        return base, batch
+
+    @pytest.mark.parametrize("attr_cols", [("seg",), ()])
+    def test_store_byte_parity(self, spark, wm, tmp_path, attr_cols):
+        from tile_grid_spark.operators.vector_tiles import (
+            _encode_features,
+            encode_point_tiles,
+        )
+        from tile_grid_spark.streaming.stream import refresh_mvt_store
+
+        base, batch = self._fixture(wm)
+        store = str(tmp_path / "store")
+        refresh_mvt_store(store, spark.createDataFrame(base, self.SCHEMA), wm, 4,
+                          attr_cols=attr_cols)
+        before = _store_bytes(spark, store)
+        n_files = len(glob.glob(store + "/part-*"))
+        refresh_mvt_store(store, spark.createDataFrame(batch, self.SCHEMA), wm, 4,
+                          attr_cols=attr_cols)
+        after = _store_bytes(spark, store)
+        assert len(glob.glob(store + "/part-*")) == n_files  # a refresh adds no file
+
+        touched = {(t.x, t.y) for t in (wm.tile(x, y, 4) for _, x, y, _ in batch)}
+        assert len(touched) == 4 and set(after) == set(before) | touched
+        # (a) untouched tiles carry their stored bytes
+        for k in set(before) - touched:
+            assert after[k] == before[k]
+        # (b) ... which are also the merge rule's re-encode of their decode
+        for k in set(before) - touched:
+            (lyr,) = decode_point_tile(after[k], with_attrs=True)["layers"]
+            feats = {f: (x, y, a) for f, x, y, a in lyr["features"]}
+            assert _encode_features(feats, "points", lyr["extent"]) == after[k]
+        # (c) every tile equals a fresh encode of its latest-per-fid points
+        latest = {r[0]: r for r in base}
+        latest.update({r[0]: r for r in batch})
+        fresh = {
+            (r.tile_x, r.tile_y): bytes(r.mvt)
+            for r in encode_point_tiles(
+                spark.createDataFrame(list(latest.values()), self.SCHEMA), wm, 4,
+                attr_cols=attr_cols,
+            ).collect()
+        }
+        assert after == fresh
+        if attr_cols:  # the all-null tile carries no tag dictionaries
+            t = wm.tile(-168.0 + 45.0, 5.0, 4)
+            (lyr,) = decode_point_tile(after[(t.x, t.y)])["layers"]
+            assert lyr["keys"] == [] and lyr["values"] == []
+
+    def test_untouched_tiles_skip_python(self, spark, wm, tmp_path):
+        """A stored tile whose bytes do not decode survives a refresh
+        elsewhere unchanged: untouched tiles never reach the decoder."""
+        from tile_grid_spark.operators.vector_tiles import upsert_point_tiles
+        from tile_grid_spark.streaming.stream import refresh_mvt_store
+
+        base, batch = self._fixture(wm)
+        built = str(tmp_path / "built")
+        refresh_mvt_store(built, spark.createDataFrame(base, self.SCHEMA), wm, 4)
+        rows = spark.read.parquet(built).orderBy("tile_x").collect()
+        bad = (rows[-1].tile_x, rows[-1].tile_y)  # tile 5, which the batch misses
+        store = str(tmp_path / "store")
+        spark.createDataFrame(
+            [(r.tile_x, r.tile_y, r.n_features,
+              b"\xff\xff" if (r.tile_x, r.tile_y) == bad else bytes(r.mvt)) for r in rows],
+            "tile_x BIGINT, tile_y BIGINT, n_features INT, mvt BINARY",
+        ).write.parquet(store)
+        with pytest.raises(IndexError):  # the decoder runs off the buffer
+            decode_point_tile(b"\xff\xff")
+        refresh_mvt_store(store, spark.createDataFrame(batch, self.SCHEMA), wm, 4)
+        got = _store_bytes(spark, store)
+        assert got[bad] == b"\xff\xff" and len(got) == len(rows) + 1
+
+        plan = (
+            upsert_point_tiles(
+                spark.read.parquet(store), spark.createDataFrame(batch, self.SCHEMA), wm, 4
+            )
+            ._jdf.queryExecution().optimizedPlan().toString()
+        )
+        semi = [ln for ln in plan.splitlines() if "Join LeftSemi" in ln]
+        assert semi and "tile_x" in semi[0] and "tile_y" in semi[0]
+        assert any("Join LeftAnti" in ln for ln in plan.splitlines())
+
+    def test_duplicate_fids_are_deterministic(self, spark, wm, tmp_path):
+        """Same pid several times in one batch tile: the copy that sorts
+        last by (fid, px, py, seg) wins, at any partitioning, replay
+        included."""
+        from tile_grid_spark.streaming.stream import refresh_mvt_store
+
+        rows = [
+            (1, 10.30, 10.0, "a"),
+            (1, 10.10, 10.0, "b"),
+            (1, 10.20, 10.0, "c"),
+            (2, 11.00, 11.0, "y"),
+            (2, 11.00, 11.0, "x"),
+            (2, 11.00, 11.0, None),
+            (3, 12.00, 12.0, "q"),
+        ]
+        got = []
+        for n in (1, 4):
+            store = str(tmp_path / f"store{n}")
+            batch = spark.createDataFrame(rows, self.SCHEMA).repartition(n)
+            refresh_mvt_store(store, batch, wm, 4, attr_cols=("seg",))
+            first = _store_bytes(spark, store)
+            refresh_mvt_store(store, batch, wm, 4, attr_cols=("seg",))  # replay
+            assert _store_bytes(spark, store) == first
+            got.append(first)
+        assert got[0] == got[1]
+        (mvt,) = got[0].values()
+        (lyr,) = decode_point_tile(mvt, with_attrs=True)["layers"]
+        assert [(f, a) for f, _x, _y, a in lyr["features"]] == [
+            (1, {"seg": "a"}), (2, {"seg": "y"}), (3, {"seg": "q"})
+        ]
+
+    def test_duplicate_fids_without_attrs(self, spark, wm):
+        """encode_point_tiles' numpy path keeps the same copy of a
+        duplicated fid: the last by (fid, px, py), at any partitioning."""
+        from tile_grid_spark.operators.vector_tiles import encode_point_tiles
+
+        schema = "pid BIGINT, lon DOUBLE, lat DOUBLE"
+        rows = [(1, 10.30, 10.0), (1, 10.10, 10.0), (1, 10.20, 10.0), (2, 11.0, 11.0)]
+        (alone,) = encode_point_tiles(
+            spark.createDataFrame([rows[0], rows[3]], schema), wm, 4
+        ).collect()
+        for n in (1, 4):
+            (got,) = encode_point_tiles(
+                spark.createDataFrame(rows, schema).repartition(n), wm, 4
+            ).collect()
+            assert got.n_features == 2 and bytes(got.mvt) == bytes(alone.mvt)
+
+    def test_int64_attrs_stay_exact(self, spark, wm):
+        """Stored rows ride the same Arrow batches as the batch points;
+        their filler columns must not turn a BIGINT attribute into
+        float64 (2**60 + 1 has no exact double)."""
+        from tile_grid_spark.operators.vector_tiles import upsert_point_tiles
+
+        schema = "pid BIGINT, lon DOUBLE, lat DOUBLE, w BIGINT"
+        old = upsert_point_tiles(
+            None, spark.createDataFrame([(1, 1.0, 1.0, 2**60 + 1)], schema), wm, 3,
+            attr_cols=("w",),
+        )
+        batch = spark.createDataFrame([(2, 1.0, 1.0, 2**60 + 3)], schema)
+        (row,) = upsert_point_tiles(old, batch, wm, 3, attr_cols=("w",)).collect()
+        (lyr,) = decode_point_tile(bytes(row.mvt), with_attrs=True)["layers"]
+        assert [a for *_, a in lyr["features"]] == [{"w": 2**60 + 1}, {"w": 2**60 + 3}]
+
+    def test_tile_budget_counts_batch_rows(self, spark, wm, monkeypatch):
+        from tile_grid_spark.operators import vector_tiles
+        from tile_grid_spark.operators.vector_tiles import upsert_point_tiles
+
+        schema = "pid BIGINT, lon DOUBLE, lat DOUBLE"
+        old = upsert_point_tiles(
+            None, spark.createDataFrame([(i, 1.0, 1.0) for i in range(5)], schema), wm, 3
+        )
+        batch = spark.createDataFrame([(i, 1.0, 1.0) for i in range(10, 13)], schema)
+        monkeypatch.setattr(vector_tiles, "MAX_FEATURES_PER_TILE", 3)
+        assert upsert_point_tiles(old, batch, wm, 3).first().n_features == 8
+        monkeypatch.setattr(vector_tiles, "MAX_FEATURES_PER_TILE", 2)
+        with pytest.raises(Exception, match="max_features_per_tile"):
+            upsert_point_tiles(old, batch, wm, 3).collect()

@@ -14,18 +14,28 @@ integers with native Column math BEFORE the shuffle, so only
 data skew: cap features per tile explicitly (`max_features_per_tile`
 raises) rather than OOM inside a task — producers should roll up dense
 zooms first (operators/rollup.py).
+
+Store maintenance (upsert_point_tiles, behind
+streaming.refresh_mvt_store) sends only the tiles a batch touches
+across the Python boundary: the batch's tile keys left-semi-join the
+stored tiles, one pass decodes those, overlays the batch points by fid
+and re-encodes; every other stored tile passes through as its stored
+bytes.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..core.tms import Tms
-from ..functions.grid_cols import mercator_x, mercator_y, xy_tile_x, xy_tile_y
+from ..functions.grid_cols import mercator_x, mercator_y, tile_key, xy_tile_x, xy_tile_y
 from ..functions.mvt import (
     DEFAULT_EXTENT,
     decode_line_tile,
@@ -33,11 +43,16 @@ from ..functions.mvt import (
     decode_poly_tile,
     encode_line_tile,
     encode_point_tile,
+    encode_point_tile_np,
     encode_poly_tile,
 )
 from .cover import cover_bbox_geographic
 
 TILES_SCHEMA = "tile_x BIGINT, tile_y BIGINT, n_features INT, mvt BINARY"
+
+# a point tile's budget of batch rows (encode_point_tiles' default,
+# upsert_point_tiles' bound)
+MAX_FEATURES_PER_TILE = 2_000_000
 
 
 def _batched_group_apply(rows: DataFrame, key_cols: list[str], build) -> DataFrame:
@@ -82,28 +97,27 @@ def _batched_group_apply(rows: DataFrame, key_cols: list[str], build) -> DataFra
     return parts.mapInPandas(run, TILES_SCHEMA)
 
 
-def encode_point_tiles(
+def _point_rows(
     points: DataFrame,
     tms: Tms,
     zoom: int,
-    id_col: str = "pid",
-    lon: str = "lon",
-    lat: str = "lat",
-    extent: int = DEFAULT_EXTENT,
-    layer: str = "points",
-    max_features_per_tile: int = 2_000_000,
-    attr_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(id, lon, lat) -> one row per non-empty tile at `zoom`:
-    (tile_x, tile_y, n_features, mvt). Features are sorted by id inside
-    each tile, so the binaries are deterministic. Local coordinates are
-    floor((frac_within_tile) * extent) clamped to [0, extent-1] — the
-    formula a SQL oracle replays verbatim.
+    id_col: str,
+    lon: str,
+    lat: str,
+    extent: int,
+    attr_cols: tuple[str, ...],
+):
+    """The JVM staging every point-tile build shares: (id, lon, lat,
+    *attrs) -> (tile_x, tile_y, fid, px, py, *attr_cols) rows with the
+    tile-local coordinates quantized by native Column math, plus
+    `tags(pdf)`, the per-row {attr: value} dicts the encoder's tag
+    dictionaries take. Local coordinates are
+    floor((frac_within_tile) * extent) clamped to [0, extent-1].
 
-    `attr_cols` columns ride the shuffle and land in the payload as the
-    spec's tag dictionaries (per-layer key/value tables, per-feature
-    index pairs; string/int64/double/bool). Null attribute values are
-    elided from that feature's tags."""
+    Nullable integral/bool columns arrive in pandas as float64 (NaN for
+    null), so `tags` restores the declared Spark type to get python
+    natives for the codec's int/bool/float/str switch; null and NaN are
+    both elided from the feature's tags."""
     p = tms.zoom_params(zoom)
     srid = tms.crs().as_srid()
     if srid == 3857:
@@ -111,7 +125,7 @@ def encode_point_tiles(
     elif srid == 4326:
         gx, gy = F.col(lon), F.col(lat)
     else:
-        raise ValueError(f"encode_point_tiles supports EPSG:3857/4326, got {tms.crs()}")
+        raise ValueError(f"point tiles support EPSG:3857/4326, got {tms.crs()}")
     span_x = p.resolution * float(p.tile_width)
     span_y = p.resolution * float(p.tile_height)
 
@@ -129,8 +143,6 @@ def encode_point_tiles(
             "tile_y": xy_tile_y(F.col("_gy"), p),
         }
     )
-    from pyspark.sql import types as T
-
     attr_casts = {
         c: (
             int
@@ -155,70 +167,147 @@ def encode_point_tiles(
         *[F.col(c) for c in attr_cols],
     )
 
+    def tags(pdf: pd.DataFrame) -> list[dict]:
+        def clean(c: str) -> list:
+            cast = attr_casts[c]
+            out = []
+            for v in pdf[c].tolist():
+                if v is None or (isinstance(v, float) and math.isnan(v)):
+                    out.append(None)
+                else:
+                    out.append(cast(v) if cast else v)
+            return out
+
+        cols = {c: clean(c) for c in attr_cols}
+        return [
+            {c: cols[c][i] for c in attr_cols if cols[c][i] is not None}
+            for i in range(len(pdf))
+        ]
+
+    return rows, tags
+
+
+def _tile_row(pdf: pd.DataFrame, n_features: int, mvt: bytes) -> pd.DataFrame:
+    """The one output row of a point-tile build (TILES_SCHEMA)."""
+    return pd.DataFrame(
+        {
+            "tile_x": [int(pdf.tile_x.iloc[0])],
+            "tile_y": [int(pdf.tile_y.iloc[0])],
+            "n_features": [n_features],
+            "mvt": [mvt],
+        }
+    )
+
+
+def _encode_features(feats: dict, layer: str, extent: int) -> bytes:
+    """{fid: (px, py, tags)} -> one point tile with features sorted by
+    fid; the numpy encoder when no feature has tags, encode_point_tile
+    (tag dictionaries) when some do. Both are byte-identical on
+    tag-less input, so a tile's bytes are a function of its fid-sorted
+    features alone."""
+    fids = sorted(feats)
+    attrs = [feats[f][2] for f in fids]
+    if any(attrs):
+        return encode_point_tile(
+            [(f, feats[f][0], feats[f][1]) for f in fids], layer, extent, attrs=attrs
+        )
+    return encode_point_tile_np(
+        np.asarray(fids, dtype=np.int64),
+        np.asarray([feats[f][0] for f in fids], dtype=np.int64),
+        np.asarray([feats[f][1] for f in fids], dtype=np.int64),
+        layer,
+        extent,
+    )
+
+
+def _point_tile_build(tags, attr_cols: tuple[str, ...], layer: str, extent: int, limit: int):
+    """The one per-tile point encode rule, shared by encode_point_tiles
+    and upsert_point_tiles. A group is one tile's batch rows (`mvt`
+    absent or null) plus, in an upsert, the tile's stored binary (`mvt`
+    set). More than `limit` batch rows raises.
+
+    A fid that appears more than once among the batch rows keeps ONE
+    copy, the one that sorts last by (fid, px, py, *attr_cols) — nulls
+    first — so the bytes depend on neither partitioning nor arrival
+    order (MVT ids should be unique within a layer). The stored tile is
+    decoded (tags included) and the batch copies overlay it by fid, the
+    batch winning. Features are written sorted by fid: the vectorized
+    numpy encoder when nothing is stored and there are no attr_cols,
+    else _encode_features."""
+
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_features_per_tile:
+        if "mvt" in pdf.columns:  # an upsert group: batch rows + the stored tile
+            payloads, batch = pdf.mvt.dropna().tolist(), pdf[pdf.mvt.isna()]
+        else:
+            payloads, batch = [], pdf
+        if len(batch) > limit:
             raise ValueError(
                 f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
-                f"{len(pdf)} features > max_features_per_tile="
-                f"{max_features_per_tile} — roll up before encoding"
+                f"{len(batch)} features > max_features_per_tile="
+                f"{limit} — roll up before encoding"
             )
-        pdf = pdf.sort_values("fid")
-        if not attr_cols:
+        fid, px, py = (batch[c].to_numpy() for c in ("fid", "px", "py"))
+        order = np.lexsort((py, px, fid))  # stable: (fid, px, py) ties keep row order
+        tg = tags(batch) if attr_cols else None
+        if tg is not None and (fid[order][1:] == fid[order][:-1]).any():
+            # copies of one fid also rank by their attrs, nulls first
+            order = np.asarray(sorted(order, key=lambda i: (
+                fid[i], px[i], py[i], *[(c in tg[i], tg[i].get(c)) for c in attr_cols]
+            )))
+        f = fid[order]
+        win = order[np.append(f[1:] != f[:-1], True)]  # the last copy of a fid
+        if tg is None and not payloads:
             # no tag dictionaries: the whole feature stream is three
             # varints per row around fixed key bytes — vectorized numpy
             # encoder, byte-identical (parity pytest), ~10x the scalar
             # per-point loop that dominated the MVT production bench
-            from ..functions.mvt import encode_point_tile_np
-
-            return pd.DataFrame(
-                {
-                    "tile_x": [int(pdf.tile_x.iloc[0])],
-                    "tile_y": [int(pdf.tile_y.iloc[0])],
-                    "n_features": [len(pdf)],
-                    "mvt": [
-                        encode_point_tile_np(
-                            pdf.fid.to_numpy(),
-                            pdf.px.to_numpy(),
-                            pdf.py.to_numpy(),
-                            layer,
-                            extent,
-                        )
-                    ],
-                }
+            return _tile_row(
+                pdf, len(win), encode_point_tile_np(fid[win], px[win], py[win], layer, extent)
             )
-        feats = [(int(f), int(x), int(y)) for f, x, y in zip(pdf.fid, pdf.px, pdf.py)]
-        attrs = None
-        if attr_cols:
-            # nullable integral/bool columns arrive in pandas as float64
-            # (NaN for null) — restore the declared Spark type so the
-            # codec's int/bool/float/str switch sees python natives;
-            # null and NaN are both elided from the feature's tags
-            import math as _math
+        feats: dict = {}
+        for payload in payloads:
+            (lyr,) = decode_point_tile(bytes(payload), with_attrs=True)["layers"]
+            if lyr["extent"] != extent:
+                raise ValueError(
+                    f"stored tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) "
+                    f"has extent {lyr['extent']}, the batch {extent}"
+                )
+            for fi, x, y, a in lyr["features"]:
+                feats[fi] = (x, y, a)
+        for i in win:
+            feats[int(fid[i])] = (int(px[i]), int(py[i]), tg[i] if tg is not None else {})
+        return _tile_row(pdf, len(feats), _encode_features(feats, layer, extent))
 
-            def _clean(c: str) -> list:
-                cast = attr_casts[c]
-                out = []
-                for v in pdf[c].tolist():
-                    if v is None or (isinstance(v, float) and _math.isnan(v)):
-                        out.append(None)
-                    else:
-                        out.append(cast(v) if cast else v)
-                return out
+    return build
 
-            cols = {c: _clean(c) for c in attr_cols}
-            attrs = [
-                {c: cols[c][i] for c in attr_cols if cols[c][i] is not None}
-                for i in range(len(pdf))
-            ]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [encode_point_tile(feats, layer, extent, attrs=attrs)],
-            }
-        )
 
+def encode_point_tiles(
+    points: DataFrame,
+    tms: Tms,
+    zoom: int,
+    id_col: str = "pid",
+    lon: str = "lon",
+    lat: str = "lat",
+    extent: int = DEFAULT_EXTENT,
+    layer: str = "points",
+    max_features_per_tile: int = MAX_FEATURES_PER_TILE,
+    attr_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id, lon, lat) -> one row per non-empty tile at `zoom`:
+    (tile_x, tile_y, n_features, mvt). Features are sorted by id inside
+    each tile, so the binaries are deterministic; an id that appears
+    more than once in a tile keeps one copy, the one that sorts last by
+    (id, px, py, *attr_cols) (_point_tile_build). Local coordinates are
+    floor((frac_within_tile) * extent) clamped to [0, extent-1] — the
+    formula a SQL oracle replays verbatim.
+
+    `attr_cols` columns ride the shuffle and land in the payload as the
+    spec's tag dictionaries (per-layer key/value tables, per-feature
+    index pairs; string/int64/double/bool). Null attribute values are
+    elided from that feature's tags."""
+    attr_cols = tuple(attr_cols)
+    rows, tags = _point_rows(points, tms, zoom, id_col, lon, lat, extent, attr_cols)
+    build = _point_tile_build(tags, attr_cols, layer, extent, max_features_per_tile)
     return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
 
 
@@ -746,42 +835,64 @@ def encode_ring_poly_tiles(
     return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
 
 
-def merge_point_tiles(old: DataFrame, new: DataFrame, layer: str = "points") -> DataFrame:
-    """Upsert-merge two point-MVT tile sets BY FEATURE ID: for each
-    tile, decode both binaries (tags included), let the `new` side win
-    on fid collisions, re-encode sorted by fid. Union + one groupBy-tile
-    exchange (2-row groups); idempotent — re-merging the same `new` set
-    reproduces identical bytes, which is what makes the streaming
-    foreachBatch store refresh safe under at-least-once replay."""
-    tagged = old.select(
-        "tile_x", "tile_y", "mvt", F.lit(0).alias("_side")
-    ).unionByName(new.select("tile_x", "tile_y", "mvt", F.lit(1).alias("_side")))
+def upsert_point_tiles(
+    old_tiles: DataFrame | None,
+    points: DataFrame,
+    tms: Tms,
+    zoom: int,
+    id_col: str = "pid",
+    attr_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Upsert a batch of (id, lon, lat[, attrs]) points BY FEATURE ID
+    into a point-MVT tile set (TILES_SCHEMA rows of layer "points" at
+    the default extent); `old_tiles=None` builds the set from the batch
+    alone, which is encode_point_tiles. Returns the whole new tile set.
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        feats: dict = {}
-        extent = DEFAULT_EXTENT
-        for _, r in pdf.sort_values("_side").iterrows():
-            (lyr,) = decode_point_tile(bytes(r.mvt), with_attrs=True)["layers"]
-            extent = lyr["extent"]
-            for fid, px, py, a in lyr["features"]:
-                feats[fid] = (px, py, a)
-        fids = sorted(feats)
-        rows = [(f, feats[f][0], feats[f][1]) for f in fids]
-        attrs = [feats[f][2] for f in fids]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(rows)],
-                "mvt": [
-                    encode_point_tile(
-                        rows, layer, extent, attrs=attrs if any(attrs) else None
-                    )
-                ],
-            }
-        )
+    Only the tiles the batch touches cross into Python. The batch's
+    packed tile keys left-semi-join the stored tiles; those stored
+    binaries and the batch's quantized point rows (the staging
+    encode_point_tiles uses) go through ONE _batched_group_apply pass
+    with encode_point_tiles' per-tile rule (_point_tile_build): decode
+    the stored tile (tags included), overlay the batch points by fid —
+    the batch wins — and re-encode sorted by fid. Every other stored
+    tile left-anti-joins the same keys and passes through as its stored
+    bytes, never decoded: the encoder writes features sorted by fid, so
+    re-encoding an untouched tile would give back the bytes it already
+    has.
 
-    return _batched_group_apply(tagged, ["tile_x", "tile_y"], build)
+    Duplicate fids inside one batch tile resolve deterministically: the
+    copy that sorts last by (fid, px, py, *attr_cols) — nulls first —
+    wins, so the bytes depend on neither partitioning nor arrival
+    order. The merge is per tile: a point that moves to another tile
+    leaves its old feature in the old tile. MAX_FEATURES_PER_TILE
+    bounds a tile's batch rows. Replaying the same batch reproduces
+    identical bytes — the idempotence the streaming store refresh
+    relies on."""
+    attr_cols = tuple(attr_cols)
+    if old_tiles is None:
+        return encode_point_tiles(points, tms, zoom, id_col=id_col, attr_cols=attr_cols)
+    extent = DEFAULT_EXTENT
+    rows, tags = _point_rows(points, tms, zoom, id_col, "lon", "lat", extent, attr_cols)
+    # semi/anti joins ignore duplicate keys: no distinct, no shuffle for it
+    keys = rows.select(tile_key("tile_x", "tile_y").alias("_k"))
+    on = tile_key(old_tiles["tile_x"], old_tiles["tile_y"]) == keys["_k"]
+    # stored rows carry typed non-null fillers in the point columns:
+    # a null would turn an integral column into float64 in pandas
+    fill = [
+        (
+            F.lit(0).cast(f.dataType)
+            if isinstance(f.dataType, (T.NumericType, T.BooleanType))
+            else F.lit(None).cast(f.dataType)
+        ).alias(f.name)
+        for f in rows.schema.fields[2:]
+    ]
+    stored = old_tiles.join(keys, on, "left_semi").select("tile_x", "tile_y", *fill, "mvt")
+    merge_in = rows.withColumn("mvt", F.lit(None).cast("binary")).unionByName(stored)
+    untouched = old_tiles.join(keys, on, "left_anti").select(
+        "tile_x", "tile_y", "n_features", "mvt"
+    )
+    build = _point_tile_build(tags, attr_cols, "points", extent, MAX_FEATURES_PER_TILE)
+    return _batched_group_apply(merge_in, ["tile_x", "tile_y"], build).unionByName(untouched)
 
 
 def tiles_for_viewport(
@@ -806,8 +917,6 @@ def tiles_for_viewport(
     rows the pushable rectangle lets through. Raises if the viewport
     covers more than 4096 tiles — that means the caller wants a lower
     zoom, not a bigger scan."""
-    from ..functions.grid_cols import tile_key
-
     cover = list(tms.tiles(west, south, east, north, [zoom], truncate=False))
     if len(cover) > 4096:
         raise ValueError(

@@ -13,6 +13,7 @@ behind the same transformations.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -295,6 +296,34 @@ def write_stream_exactly_once(
     return w.start()
 
 
+def _recover_store(store_path: str) -> None:
+    """Undo a store swap that a crash cut between its two renames: the
+    live directory is gone and `<store>.old` holds the previous store.
+    Rename `.old` back, so the replayed batch merges into the previous
+    store — safe because both store merges are idempotent. A stale
+    `.tmp` needs no cleanup: _swap_store overwrites it."""
+    old = store_path + ".old"
+    if not os.path.isdir(store_path) and os.path.isdir(old):
+        os.rename(old, store_path)
+
+
+def _swap_store(store_path: str, df: DataFrame) -> None:
+    """Write `df` in full to `<store>.tmp`, then swap it live: rename
+    live -> `.old`, `.tmp` -> live, delete `.old`. A crash at any point
+    leaves a complete live store or a complete `.old` one
+    (_recover_store restores it), never a half-written store."""
+    tmp = store_path + ".tmp"
+    old = store_path + ".old"
+    df.write.mode("overwrite").parquet(tmp)  # materialized BEFORE swap
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+    if os.path.isdir(store_path):
+        os.rename(store_path, old)
+    os.rename(tmp, store_path)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+
+
 def refresh_tile_store(
     store_path: str,
     updates: DataFrame,
@@ -304,18 +333,19 @@ def refresh_tile_store(
     """Merge a batch of per-key updates latest-wins into a parquet
     store (sources/io.upsert_latest — union + one key shuffle + top-1,
     no join). The merged result is FULLY written to `<store>.tmp`
-    before the live directory is swapped, so a crash never leaves a
-    half-written store; the previous store survives as `<store>.old`
-    until the swap completes. At 100 TB this exact plan runs underneath
+    before the live directory is swapped (_swap_store), so a crash
+    never leaves a half-written store; the previous store survives as
+    `<store>.old` until the swap completes, and a refresh that finds
+    only `.old` (a crash between the swap's renames) restores it before
+    merging (_recover_store). At 100 TB this exact plan runs underneath
     a table format's MERGE INTO with partition pruning bounding the
     rewritten span — the full-rewrite swap here is the format-free
     equivalent, correct at any size, optimal only when updates touch
     most partitions."""
-    import shutil
-
     from ..sources.io import upsert_latest
 
     spark = updates.sparkSession
+    _recover_store(store_path)
     if os.path.isdir(store_path):
         current = spark.read.parquet(store_path)
         merged = upsert_latest(current, updates, key_cols, version_col)
@@ -323,17 +353,7 @@ def refresh_tile_store(
         merged = upsert_latest(
             spark.createDataFrame([], updates.schema), updates, key_cols, version_col
         )
-    tmp = store_path + ".tmp"
-    old = store_path + ".old"
-    merged.write.mode("overwrite").parquet(tmp)  # materialized BEFORE swap
-    for p in (old,):
-        if os.path.isdir(p):
-            shutil.rmtree(p)
-    if os.path.isdir(store_path):
-        os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    _swap_store(store_path, merged)
 
 
 def stream_tile_store_refresh(
@@ -375,38 +395,33 @@ def refresh_mvt_store(
     id_col: str = "pid",
     attr_cols: tuple = (),
 ) -> None:
-    """Merge a batch of points into a parquet store of point-MVT tile
-    binaries: encode the batch (operators/vector_tiles.encode_point_tiles,
-    tags included), upsert-merge BY FEATURE ID into the existing tiles
-    (merge_point_tiles — the new side wins fid collisions, so a point
-    update re-renders its tile), and atomically swap the store like
-    refresh_tile_store. Replaying the same batch reproduces identical
-    bytes — the idempotence the streaming wrapper relies on. Same
-    full-rewrite caveat: a table format bounds the rewritten span with
-    partition pruning at 100 TB; the swap here is the format-free
-    equivalent."""
-    import shutil
-
-    from ..operators.vector_tiles import encode_point_tiles, merge_point_tiles
+    """Upsert a batch of points BY FEATURE ID into a parquet store of
+    point-MVT tile binaries (operators/vector_tiles.upsert_point_tiles,
+    tags included; the batch wins fid collisions, so a point update
+    re-renders its tile) and swap the result live (_swap_store). The
+    first batch builds the store. Only the tiles the batch touches are
+    decoded and re-encoded; the others are copied as stored bytes, but
+    the parquet store itself is still rewritten in full. Replaying the
+    same batch reproduces identical bytes — the idempotence the
+    streaming wrapper relies on — and a refresh that finds only
+    `<store>.old` (a crash between the swap's renames) restores it
+    first (_recover_store), so the replay merges into the previous
+    store. Same full-rewrite caveat as refresh_tile_store: a table
+    format bounds the rewritten span with partition pruning at 100 TB;
+    the swap here is the format-free equivalent."""
+    from ..operators.vector_tiles import upsert_point_tiles
 
     spark = points.sparkSession
-    new_tiles = encode_point_tiles(
-        points, tms, zoom, id_col=id_col, attr_cols=tuple(attr_cols)
+    _recover_store(store_path)
+    old = spark.read.parquet(store_path) if os.path.isdir(store_path) else None
+    merged = upsert_point_tiles(
+        old, points, tms, zoom, id_col=id_col, attr_cols=tuple(attr_cols)
     )
-    if os.path.isdir(store_path):
-        merged = merge_point_tiles(spark.read.parquet(store_path), new_tiles)
-    else:
-        merged = new_tiles
-    tmp = store_path + ".tmp"
-    old = store_path + ".old"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(store_path):
-        os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    if old is not None:
+        # untouched tiles keep their scan partitions: hold the file count
+        # at the live store's, or every refresh would add a file
+        merged = merged.coalesce(max(1, len(old.inputFiles())))
+    _swap_store(store_path, merged)
 
 
 def stream_mvt_store_refresh(
@@ -421,11 +436,14 @@ def stream_mvt_store_refresh(
     available_now: bool = True,
 ):
     """Streaming maintenance of the SERVED artifact itself: each
-    micro-batch of (id, lon, lat[, attrs]) points re-renders exactly
-    the vector tiles it touches and swaps them into the live store.
-    Append-mode source, foreachBatch sink; idempotent under
-    at-least-once replay because the tile merge is keyed by feature id.
-    Returns the started query handle."""
+    micro-batch of (id, lon, lat[, attrs]) points re-encodes exactly
+    the vector tiles it touches (refresh_mvt_store; untouched tiles are
+    copied as stored bytes, the parquet store is rewritten in full) and
+    swaps the result into the live store. Append-mode source,
+    foreachBatch sink; idempotent under at-least-once replay because
+    the tile merge is keyed by feature id, and a batch replayed after a
+    crash between the swap's renames merges into the restored previous
+    store. Returns the started query handle."""
 
     def commit(bdf: DataFrame, batch_id: int) -> None:
         refresh_mvt_store(
