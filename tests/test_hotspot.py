@@ -141,94 +141,6 @@ def test_null_x_row_is_dropped(spark, wm):
     assert got == {(3, 3): (5, 6, 3), (4, 3): (1, 6, 3), (9, 9): (2, 2, 1)}
 
 
-class TestStreamHotspot:
-    """Streaming twin: the maintained count store derives a Gi* layer
-    BIT-identical to the batch operator over the union of all streamed
-    points (global statistic recomputed from exact additive integers)."""
-
-    @staticmethod
-    def _as_df(spark, lon, lat):
-        return spark.createDataFrame(
-            [(float(lo), float(la)) for lo, la in zip(lon, lat)],
-            "lon DOUBLE, lat DOUBLE",
-        )
-
-    def test_replay_equals_batch(self, spark, wm, tmp_path):
-        from tile_grid_spark.streaming.stream import (
-            hotspot_layer,
-            refresh_hotspot_count_store,
-        )
-
-        lon, lat = _synth(n=1200, seed=17)
-        cut = 700
-        store = str(tmp_path / "counts")
-        b1 = self._as_df(spark, lon[:cut], lat[:cut])
-        b2 = self._as_df(spark, lon[cut:], lat[cut:])
-        refresh_hotspot_count_store(store, b1, wm, 5, batch_id=0)
-        refresh_hotspot_count_store(store, b2, wm, 5, batch_id=1)
-        # at-least-once replay of batch 1: identical rows, no-op
-        refresh_hotspot_count_store(store, b2, wm, 5, batch_id=1)
-
-        got = {
-            (r["tile_x"], r["tile_y"]): (r["x"], r["ring_sum"], r["ring_n"], r["gi"])
-            for r in hotspot_layer(spark, store, wm, 5).collect()
-        }
-        want = {
-            (r["tile_x"], r["tile_y"]): (r["x"], r["ring_sum"], r["ring_n"], r["gi"])
-            for r in getis_ord_gi_star(
-                self._as_df(spark, lon, lat), wm, 5
-            ).collect()
-        }
-        assert got == want  # bit-exact, gi included
-
-    def test_file_stream_two_runs_share_checkpoint(self, spark, wm, tmp_path):
-        import pandas as pd
-
-        from tile_grid_spark.streaming.stream import (
-            hotspot_layer,
-            stream_hotspot_refresh,
-        )
-
-        lon, lat = _synth(n=900, seed=29)
-        src = tmp_path / "src"
-        src.mkdir()
-        store = str(tmp_path / "counts")
-        ckpt = str(tmp_path / "ckpt")
-        pd.DataFrame({"lon": lon[:500], "lat": lat[:500]}).to_parquet(
-            src / "b0.parquet"
-        )
-
-        def run():
-            pts = spark.readStream.schema("lon DOUBLE, lat DOUBLE").parquet(
-                str(src)
-            )
-            q = stream_hotspot_refresh(pts, store, ckpt, wm, 5)
-            q.awaitTermination()
-
-        run()
-        first = {
-            (r["tile_x"], r["tile_y"]): r["x"]
-            for r in hotspot_layer(spark, store, wm, 5).collect()
-        }
-        assert sum(first.values()) == 500
-
-        pd.DataFrame({"lon": lon[500:], "lat": lat[500:]}).to_parquet(
-            src / "b1.parquet"
-        )
-        run()  # second availableNow pass folds in only the new file
-        got = {
-            (r["tile_x"], r["tile_y"]): (r["x"], r["gi"])
-            for r in hotspot_layer(spark, store, wm, 5).collect()
-        }
-        want = {
-            (r["tile_x"], r["tile_y"]): (r["x"], r["gi"])
-            for r in getis_ord_gi_star(
-                self._as_df(spark, lon, lat), wm, 5
-            ).collect()
-        }
-        assert got == want
-
-
 def test_image_hotspot_query_matches_python_oracle(spark, wm):
     """The entry composition (real-codec brightness sums -> z6 tiles ->
     weighted Gi*) against a from-scratch numpy oracle: pixel bytes from

@@ -13,7 +13,7 @@ Layout:
 - operators/  distributed operators (cover, PIP join, kNN, raster, dedup, ANN)
 - sources/    IO seam (parquet now, iceberg in production) + synthetic datagen
 - plans/      session config, lineage/checkpoint, skew handling
-- streaming/  structured-streaming variants of the stateless projections
+- streaming/  the served MVT store and the one stream that maintains it
 """
 
 __version__ = "0.1.0"

@@ -93,23 +93,6 @@ def merc_tile_ul(xtile, ytile, zoom):
 
 _CONSTRUCTIBLE = {(4326, 3857), (3857, 4326), (3395, 4326), (4326, 3395)}
 
-# Generic-CRS fallback factory (the reference's `projtransform` feature
-# seam, src/transform/proj.rs:7-26): None by default — unsupported pairs
-# raise exactly like the featureless reference build. core.proj's
-# enable_pyproj() installs a factory (Crs, Crs) -> transformer here, at
-# which point EVERY Transformer.from_crs consumer (Tms.bounds/tile/
-# transformed_bbox, bounding-box validation) gains generic-CRS support
-# with no call-site changes.
-_FALLBACK_FACTORY = None
-
-
-def set_fallback_factory(factory) -> None:
-    """Install (or clear, with None) the generic-CRS transformer
-    factory consulted when the basic pair matrix can't construct."""
-    global _FALLBACK_FACTORY
-    _FALLBACK_FACTORY = factory
-
-
 class Transformer:
     """CRS pair transformer matching BasicTransformer's constructibility
     matrix (/root/reference/src/transform/basic.rs:12-20) plus engine
@@ -125,14 +108,7 @@ class Transformer:
 
     @staticmethod
     def from_crs(from_crs: Crs, to_crs: Crs) -> "Transformer":
-        try:
-            return Transformer(from_crs, to_crs)
-        except TransformationUnsupported:
-            if _FALLBACK_FACTORY is not None:
-                t = _FALLBACK_FACTORY(from_crs, to_crs)
-                if t is not None:
-                    return t
-            raise
+        return Transformer(from_crs, to_crs)
 
     def transform(self, x, y):
         if self._pair == (4326, 3857):

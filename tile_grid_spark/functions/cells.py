@@ -424,25 +424,6 @@ def hex_k_ring_offsets(r: int) -> list[tuple[int, int]]:
     return out
 
 
-def hex_cell_center(cell) -> tuple[np.ndarray, np.ndarray]:
-    """Cell id -> (lon, lat) of the hex center: exact inverse of
-    hex_cell_id's axial->gnomonic-plane mapping followed by the inverse
-    gnomonic projection (normalize back onto the sphere)."""
-    res, face, q, r = hex_unpack(cell)
-    size = 1.0 / (_RES0_SCALE * (_SQRT7 ** res.astype(np.float64)))
-    py = 1.5 * size * r
-    px = math.sqrt(3.0) * size * (q + r / 2.0)
-    p = (
-        _FACE_CENTERS[face]
-        + px[:, None] * _FACE_U[face]
-        + py[:, None] * _FACE_V[face]
-    )
-    p /= np.linalg.norm(p, axis=1, keepdims=True)
-    lon = np.degrees(np.arctan2(p[:, 1], p[:, 0]))
-    lat = np.degrees(np.arcsin(np.clip(p[:, 2], -1.0, 1.0)))
-    return lon, lat
-
-
 def hex_cell_udf(res: int):
     @F.pandas_udf(LongType())
     def f(lon: pd.Series, lat: pd.Series) -> pd.Series:

@@ -83,12 +83,11 @@ def getis_ord_gi_star(
 
 def gi_star_from_counts(counts: DataFrame, tms: Tms, zoom: int) -> DataFrame:
     """Gi* over a pre-aggregated per-tile count frame (tile_x, tile_y,
-    x) — the maintained-store entry point (streaming twin): the counts
-    may come from any incremental pipeline as long as they are exact
-    integers; identical integers give bit-identical gi, which is what
-    the replay-equals-batch gate asserts. Tiles outside the clamp
-    domain [0, width-1] x [0, height-1] are excluded exactly like the
-    points path.
+    x). getis_ord_gi_star calls it after counting points per tile, and
+    the image_hotspot query with per-tile brightness sums: any exact
+    integer weight works, and identical integers give bit-identical
+    gi. Tiles outside the clamp domain [0, width-1] x [0, height-1] are
+    excluded exactly like the points path.
 
     A row with NULL x is dropped from the output (a tile is in the study
     set only when its own x is non-NULL). It still counts toward the

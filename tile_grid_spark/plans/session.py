@@ -55,10 +55,9 @@ def build_session(
         # Engine math reproduces IEEE edge semantics (inf/NaN clamps) itself;
         # ANSI throw-on-overflow would break reference-faithful casts.
         .config("spark.sql.ansi.enabled", "false")
-        # Pinned so epoch arithmetic (streaming stateful ops, hourly
-        # rollups) is deployment-independent: a non-UTC session timezone
-        # would shift naive-datetime views of event time by the UTC
-        # offset and silently break replay-equals-batch.
+        # Pinned so epoch arithmetic (hourly rollups, sessions) is
+        # deployment-independent: a non-UTC session timezone would shift
+        # naive-datetime views of event time by the UTC offset.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # bucketed tables (sources/io.write_bucketed) need a catalog
