@@ -535,7 +535,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_raster_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rasterization kernel check: per z5 tile, point count and max
-    per-pixel count (256px grid). The applyInPandas painter's pixel math
+    per-pixel count (256px grid). The batched painter's pixel math
     is replayed in SQL by the oracle."""
     from tile_grid_spark.operators.raster import rasterize_points
 

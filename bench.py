@@ -479,8 +479,8 @@ SIMPLIFY_STEPS = int(os.environ.get("SPARK_GRAFT_SIMPLIFY_STEPS", "200"))
 
 def bench_mvt_encode(spark: SparkSession) -> dict:
     """Vector-tile production throughput: MVT_ROWS generated points
-    quantized with native Columns, ONE groupBy-tile exchange, per-tile
-    MVT binaries built in applyInPandas (z6: ~4k tiles, ~500 pts/tile —
+    quantized with native Columns, ONE tile-key exchange, per-tile
+    MVT binaries built by the batched group kernel (z6: ~4k tiles, ~500 pts/tile —
     the serving-pyramid mid-zoom shape)."""
     from tile_grid_spark.operators.vector_tiles import encode_point_tiles
 

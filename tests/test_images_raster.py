@@ -11,7 +11,6 @@ from tile_grid_spark.core import tms
 from tile_grid_spark.functions.image import decode_image, psnr, with_payload_checks
 from tile_grid_spark.operators.raster import (
     decode_mask,
-    mosaic_to_parent,
     rasterize_points,
     vectorize_tiles,
 )
@@ -146,30 +145,18 @@ class TestFootprints:
                 n_multi += 1
         assert n_multi > 0  # fixture genuinely overlaps footprints
 
-    def test_batched_painter_survives_tiny_arrow_batches(self, spark, wm):
-        # the mapInPandas painter holds back the last tile of every Arrow
-        # batch; force 7-row batches so tiles split across boundaries and
-        # verify nothing is painted twice or dropped
+    def _footprint_case(self, spark, wm):
         from tile_grid_spark.operators.raster import rasterize_footprints
 
-        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        try:
-            rng = np.random.default_rng(8)
-            n = 200
-            # few distinct tiles -> many rows per tile -> guaranteed splits
-            lon = rng.uniform(-20, 20, n)
-            lat = rng.uniform(-15, 15, n)
-            df = spark.createDataFrame(
-                list(zip(lon.tolist(), lat.tolist(), [32] * n, [32] * n)),
-                "lon DOUBLE, lat DOUBLE, w INT, h INT",
-            )
-            got = rasterize_footprints(df, wm, 4, ground_px_m=3000.0, tile_px=16).collect()
-        finally:
-            if old is None:
-                spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-            else:
-                spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+        rng = np.random.default_rng(8)
+        n = 200
+        # few distinct tiles -> many rows per tile -> guaranteed splits
+        lon = rng.uniform(-20, 20, n)
+        lat = rng.uniform(-15, 15, n)
+        df = spark.createDataFrame(
+            list(zip(lon.tolist(), lat.tolist(), [32] * n, [32] * n)),
+            "lon DOUBLE, lat DOUBLE, w INT, h INT",
+        )
         R = 6378137.0
         mx = R * np.radians(lon)
         my = R * np.log(np.tan(np.pi / 4 + 0.5 * np.radians(lat)))
@@ -178,13 +165,91 @@ class TestFootprints:
              mx[i] + 32 * 1500.0, my[i] + 32 * 1500.0)
             for i in range(n)
         ]
-        exp = TestFootprints()._brute(wm, 4, 16, fps)
-        assert {(r.tile_x, r.tile_y) for r in got} == set(exp)
-        assert len(got) == len({(r.tile_x, r.tile_y) for r in got})  # no dup tiles
-        for r in got:
-            img = exp[(r.tile_x, r.tile_y)]
-            assert r.covered_px_sum == int(img.sum()), (r.tile_x, r.tile_y)
-            assert r.max_cover == int(img.max())
+        exp = self._brute(wm, 4, 16, fps)
+        return (
+            lambda: rasterize_footprints(df, wm, 4, ground_px_m=3000.0, tile_px=16).collect(),
+            lambda r: (r.tile_x, r.tile_y, r.covered_px_sum, r.max_cover),
+            [(tx, ty, int(img.sum()), int(img.max())) for (tx, ty), img in exp.items()],
+        )
+
+    def _upsert_case(self, spark, wm):
+        from tile_grid_spark.operators.vector_tiles import TILES_SCHEMA, upsert_point_tiles
+
+        rng = np.random.default_rng(9)
+        schema = "pid BIGINT, lon DOUBLE, lat DOUBLE"
+        base = [(i, *rng.uniform(-40, 40, 2).tolist()) for i in range(80)]
+        batch = [(1000 + i, *rng.uniform(-40, 40, 2).tolist()) for i in range(60)]
+        # the stored tile set is built once, at the default batch size
+        old = spark.createDataFrame(
+            upsert_point_tiles(None, spark.createDataFrame(base, schema), wm, 3).collect(),
+            TILES_SCHEMA,
+        )
+        new = spark.createDataFrame(batch, schema)
+        counts: dict = {}
+        for _, lon, lat in base + batch:
+            t = wm.tile(lon, lat, 3)
+            counts[(t.x, t.y)] = counts.get((t.x, t.y), 0) + 1
+        return (
+            lambda: upsert_point_tiles(old, new, wm, 3).collect(),
+            lambda r: (r.tile_x, r.tile_y, r.n_features),
+            [(tx, ty, c) for (tx, ty), c in counts.items()],
+        )
+
+    def _simplify_case(self, spark, wm):
+        from tile_grid_spark.operators.simplify import dp_keep_mask, simplify_paths
+
+        rng = np.random.default_rng(10)
+        rows = []
+        for tid in range(6):
+            xs = np.cumsum(rng.normal(0, 1, 40))
+            ys = np.cumsum(rng.normal(0, 1, 40))
+            rows += [(tid, seq, float(x), float(y)) for seq, (x, y) in enumerate(zip(xs, ys))]
+        df = spark.createDataFrame(rows, "tid BIGINT, seq BIGINT, x DOUBLE, y DOUBLE")
+        exp = []
+        for tid in range(6):
+            tr = [r for r in rows if r[0] == tid]
+            keep = dp_keep_mask(np.array([r[2] for r in tr]), np.array([r[3] for r in tr]), 0.5)
+            exp += [(r[0], r[1]) for r, k in zip(tr, keep) if k]
+        return (
+            lambda: simplify_paths(df, 0.5).collect(),
+            lambda r: (r.tid, r.seq),
+            exp,
+        )
+
+    @pytest.mark.parametrize("case", ["rasterize_footprints", "upsert_point_tiles", "simplify_paths"])
+    def test_batched_painter_survives_tiny_arrow_batches(self, spark, wm, case):
+        # the batched group kernel holds back the last group of every
+        # Arrow batch; force 7-row batches so groups split across
+        # boundaries, then require every caller's output to equal the
+        # same call at the default batch size and to hold each group
+        # exactly once
+        run, project, expected = {
+            "rasterize_footprints": self._footprint_case,
+            "upsert_point_tiles": self._upsert_case,
+            "simplify_paths": self._simplify_case,
+        }[case](spark, wm)
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, "7")
+        try:
+            tiny = run()
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
+        default = run()
+        assert sorted(tiny) == sorted(default)
+        assert sorted(project(r) for r in default) == sorted(expected)
+
+    def test_rejects_non_mercator_tms(self, spark):
+        # ground_px_m is metres: a degree-frame TMS raises when the plan
+        # is built, before any job runs
+        from tile_grid_spark.operators.raster import rasterize_footprints
+
+        df = spark.createDataFrame([(0.0, 0.0, 4, 4)], "lon DOUBLE, lat DOUBLE, w INT, h INT")
+        with pytest.raises(ValueError, match="EPSG:3857"):
+            rasterize_footprints(df, tms().lookup("WorldCRS84Quad"), 2, ground_px_m=10.0)
 
     def test_cross_tile_footprint_and_world_edge(self, spark, wm):
         from tile_grid_spark.operators.raster import rasterize_footprints
@@ -554,15 +619,6 @@ class TestRaster:
         assert mask.sum() >= min(row.n_points, 255)  # counts painted
         assert row.max_count >= 1
 
-    def test_mosaic_rollup(self, spark, wm, images):
-        z = 4
-        r = rasterize_points(images, wm, z)
-        parent = mosaic_to_parent(r)
-        tp = parent.agg(F.sum("n_points")).collect()[0][0]
-        assert tp == 400
-        pz = parent.select("zoom").distinct().collect()
-        assert [x.zoom for x in pz] == [z - 1]
-
     def test_vectorize_feature(self, spark, wm):
         df = spark.createDataFrame([(10, 486, 332)], "zoom INT, tile_x BIGINT, tile_y BIGINT")
         feat = json.loads(vectorize_tiles(df).collect()[0].feature)
@@ -593,6 +649,29 @@ class TestRaster:
         # any of the four center pixels
         assert mask[127:129, 127:129].sum() == 1
         assert mask.sum() == 1
+
+    def test_geographic_tms_paints_in_degrees(self, spark):
+        # WorldCRS84Quad tiles AND pixels both live in the TMS's degree
+        # frame: pixel = floor(frac_within_tile * tile_px)
+        geo = tms().lookup("WorldCRS84Quad")
+        p = geo.zoom_params(2)
+        unit = p.resolution * float(p.tile_width)
+        pts = [(10.0, 10.0), (-100.0, -40.0), (45.0, 60.0)]
+        df = spark.createDataFrame(pts, "lon DOUBLE, lat DOUBLE")
+        got = {
+            (r.tile_x, r.tile_y): decode_mask(bytes(r.mask), 16)
+            for r in rasterize_points(df, geo, 2, tile_px=16).collect()
+        }
+        pixels = []
+        for lon, lat in pts:
+            fx, fy = (lon - p.origin_x) / unit, (p.origin_y - lat) / unit
+            t = geo.tile(lon, lat, 2)
+            assert (t.x, t.y) == (int(fx), int(fy))
+            px, py = int((fx - t.x) * 16), int((fy - t.y) * 16)
+            assert got[(t.x, t.y)][py, px] == 1 and got[(t.x, t.y)].sum() == 1
+            pixels.append((px, py))
+        assert len(got) == 3
+        assert pixels == [(3, 12), (12, 14), (0, 10)]
 
 
 class TestPhashNearDup:

@@ -53,10 +53,8 @@ class TestTileAssignment:
         )
         rows = {}
         for z in (4, 5):
-            p = wm.zoom_params(z)
-            out = df.filter(F.col("zoom") == z).select(
-                G.tile_x_from_lonlat("lon", p).alias("x"),
-                G.tile_y_from_lonlat("lat", p).alias("y"),
+            out = G.with_tile(df.filter(F.col("zoom") == z), wm, z).select(
+                F.col("tile_x").alias("x"), F.col("tile_y").alias("y")
             )
             rows[z] = [(r.x, r.y) for r in out.collect()]
         assert rows[5] == [(0, 0), (17, 14)]  # tests/tiles.rs:90-96
@@ -121,11 +119,8 @@ class TestTileAssignment:
             for r in G.with_tiles_multizoom(pdf, wm, zooms).collect()
         }
         for z in zooms:
-            p = wm.zoom_params(z)
-            slow = pdf.select(
-                "id",
-                G.tile_x_from_lonlat("lon", p).alias("x"),
-                G.tile_y_from_lonlat("lat", p).alias("y"),
+            slow = G.with_tile(pdf, wm, z).select(
+                "id", F.col("tile_x").alias("x"), F.col("tile_y").alias("y")
             ).collect()
             for r in slow:
                 assert fast[(r.id, z)] == (r.x, r.y), (r.id, z)

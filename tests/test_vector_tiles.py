@@ -353,14 +353,16 @@ class TestEncodePointTiles:
         assert sum(r.n_features for r in got) == 30
         assert all(r.extent == 4096 for r in got)
 
-    def test_dense_tile_budget_raises(self, spark, wm):
+    def test_dense_tile_budget_raises(self, spark, wm, monkeypatch):
+        from tile_grid_spark.operators import vector_tiles
         from tile_grid_spark.operators.vector_tiles import encode_point_tiles
 
         pts = spark.createDataFrame(
             [(i, 1.0, 1.0) for i in range(50)], "pid BIGINT, lon DOUBLE, lat DOUBLE"
         )
+        monkeypatch.setattr(vector_tiles, "MAX_FEATURES_PER_TILE", 10)
         with pytest.raises(Exception, match="max_features_per_tile"):
-            encode_point_tiles(pts, wm, 3, max_features_per_tile=10).collect()
+            encode_point_tiles(pts, wm, 3).collect()
 
     def test_single_exchange_plan(self, spark, wm):
         from tile_grid_spark.operators.vector_tiles import encode_point_tiles

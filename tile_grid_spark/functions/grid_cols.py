@@ -83,13 +83,17 @@ def xy_tile_y(y: ColumnOrName, p: ZoomParams) -> Column:
     return _tile_index(yc, raw, F.lit(p.matrix_height))
 
 
-def tile_x_from_lonlat(lon: ColumnOrName, p: ZoomParams) -> Column:
-    """Composed geographic->tile (x axis) for a Mercator-family TMS."""
-    return xy_tile_x(mercator_x(lon), p)
-
-
-def tile_y_from_lonlat(lat: ColumnOrName, p: ZoomParams) -> Column:
-    return xy_tile_y(mercator_y(lat), p)
+def xy_cols(tms: Tms, lon: ColumnOrName, lat: ColumnOrName) -> tuple[Column, Column]:
+    """Geographic (lon, lat) -> (x, y) in the TMS CRS: the Column lift of
+    Tms.xy (reference src/tms.rs:446-455) and the one place the engine
+    decides that projection. EPSG:3857 is the forward Mercator,
+    EPSG:4326 the identity; any other CRS raises ValueError naming it."""
+    srid = tms.crs().as_srid()
+    if srid == 3857:
+        return mercator_x(lon), mercator_y(lat)
+    if srid == 4326:
+        return _col(lon), _col(lat)
+    raise ValueError(f"lon/lat projection supports EPSG:3857/4326 TMS, got {tms.crs()}")
 
 
 def with_tile(
@@ -107,17 +111,9 @@ def with_tile(
     clamp's CASE WHEN branches reference a column instead of re-evaluating
     radians/ln/tan (codegen does not CSE across when() branches).
     """
-    p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        staged = df.withColumns({"_gx": mercator_x(lon), "_gy": mercator_y(lat)})
-    elif srid == 4326:
-        staged = df.withColumns({"_gx": _col(lon), "_gy": _col(lat)})
-    else:
-        raise ValueError(f"with_tile supports EPSG:3857/4326 TMS, got {tms.crs()}")
-    return staged.withColumns(
-        {out_x: xy_tile_x(F.col("_gx"), p), out_y: xy_tile_y(F.col("_gy"), p)}
-    ).drop("_gx", "_gy")
+    gx, gy = xy_cols(tms, lon, lat)
+    staged = df.withColumns({"_gx": gx, "_gy": gy})
+    return with_tile_xy(staged, tms, zoom, "_gx", "_gy", out_x, out_y).drop("_gx", "_gy")
 
 
 def tile_key(
@@ -178,13 +174,8 @@ def with_tiles_multizoom(
     Output gains `zoom, tile_x, tile_y`; row count multiplies by
     len(zooms) by design.
     """
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        staged = df.withColumns({"_gx": mercator_x(lon), "_gy": mercator_y(lat)})
-    elif srid == 4326:
-        staged = df.withColumns({"_gx": _col(lon), "_gy": _col(lat)})
-    else:
-        raise ValueError(f"multizoom assignment supports EPSG:3857/4326, got {tms.crs()}")
+    gx, gy = xy_cols(tms, lon, lat)
+    staged = df.withColumns({"_gx": gx, "_gy": gy})
 
     params = [tms.zoom_params(z) for z in zooms]
     if any(p.matrix_width >= 2**53 for p in params):

@@ -64,6 +64,13 @@ def _len_delim(field: int, payload: bytes) -> bytes:
     return _key(field, 2) + _varint(len(payload)) + payload
 
 
+def _layer(name: str, extent: int, body: bytes) -> bytes:
+    """One Tile holding one Layer: version 2, name, extent, then `body`
+    (the layer's dictionaries and features, already encoded)."""
+    header = _key(15, 0) + _varint(2) + _len_delim(1, name.encode()) + _key(5, 0) + _varint(extent)
+    return _len_delim(3, header + body)
+
+
 def _encode_value(v) -> bytes:
     """One MVT Value message (layer value-dictionary entry). Types per
     spec 2.1 §4.1: string=1, double=3, int64=4 (plain varint, two's
@@ -176,14 +183,7 @@ def encode_point_tile(
         dicts += _len_delim(3, k.encode())
     for (_t, v) in vals:
         dicts += _len_delim(4, _encode_value(v))
-    layer = (
-        _key(15, 0) + _varint(2)
-        + _len_delim(1, layer_name.encode())
-        + _key(5, 0) + _varint(extent)
-        + bytes(dicts)
-        + bytes(feats)
-    )
-    return _len_delim(3, layer)
+    return _layer(layer_name, extent, bytes(dicts) + bytes(feats))
 
 
 def _varint_cols(vals, max_bytes: int = 10):
@@ -262,13 +262,37 @@ def encode_point_tile_np(fids, pxs, pys, layer_name: str, extent: int) -> bytes:
     put(xcols, xlens)
     put(ycols, ylens)
 
-    layer = (
-        _key(15, 0) + _varint(2)
-        + _len_delim(1, layer_name.encode())
-        + _key(5, 0) + _varint(extent)
-        + buf.tobytes()
-    )
-    return _len_delim(3, layer)
+    return _layer(layer_name, extent, buf.tobytes())
+
+
+def _encode_paths(features, layer_name: str, extent: int, gtype: int) -> bytes:
+    """The one command-stream writer for LINESTRING (gtype 2) and POLYGON
+    (gtype 3) layers: per path MoveTo(1) + LineTo(n-1), plus ClosePath
+    for a polygon ring; deltas are cumulative, the cursor persisting
+    across a feature's paths."""
+    close = gtype == 3
+    feats = bytearray()
+    for fid, paths in features:
+        geom = bytearray()
+        cx = cy = 0  # the cursor persists across paths within a feature
+        for path in paths:
+            if close and len(path) < 3:
+                raise ValueError(f"ring needs >= 3 vertices, got {len(path)}")
+            if len(path) < 2:
+                raise ValueError(f"linestring part needs >= 2 vertices, got {len(path)}")
+            x0, y0 = path[0]
+            geom += _varint(9)  # MoveTo(1)
+            geom += _varint(_zigzag(x0 - cx)) + _varint(_zigzag(y0 - cy))
+            cx, cy = x0, y0
+            geom += _varint(2 | ((len(path) - 1) << 3))  # LineTo(n-1)
+            for x, y in path[1:]:
+                geom += _varint(_zigzag(x - cx)) + _varint(_zigzag(y - cy))
+                cx, cy = x, y
+            if close:
+                geom += _varint(15)  # ClosePath(1)
+        body = _key(1, 0) + _varint(fid) + _key(3, 0) + _varint(gtype) + _len_delim(4, bytes(geom))
+        feats += _len_delim(2, body)
+    return _layer(layer_name, extent, bytes(feats))
 
 
 def encode_poly_tile(
@@ -281,35 +305,7 @@ def encode_poly_tile(
     it). Coords are tile-local ints and MAY lie outside [0, extent) —
     the clip-buffer case. Emitted in the given order; ring 0 should be
     the exterior (clockwise in y-down)."""
-    feats = bytearray()
-    for fid, rings in features:
-        geom = bytearray()
-        cx = cy = 0  # the cursor persists across rings within a feature
-        for ring in rings:
-            if len(ring) < 3:
-                raise ValueError(f"ring needs >= 3 vertices, got {len(ring)}")
-            x0, y0 = ring[0]
-            geom += _varint(9)  # MoveTo(1)
-            geom += _varint(_zigzag(x0 - cx)) + _varint(_zigzag(y0 - cy))
-            cx, cy = x0, y0
-            geom += _varint(2 | ((len(ring) - 1) << 3))  # LineTo(n-1)
-            for x, y in ring[1:]:
-                geom += _varint(_zigzag(x - cx)) + _varint(_zigzag(y - cy))
-                cx, cy = x, y
-            geom += _varint(15)  # ClosePath(1)
-        body = (
-            _key(1, 0) + _varint(fid)
-            + _key(3, 0) + _varint(3)  # POLYGON
-            + _len_delim(4, bytes(geom))
-        )
-        feats += _len_delim(2, body)
-    layer = (
-        _key(15, 0) + _varint(2)
-        + _len_delim(1, layer_name.encode())
-        + _key(5, 0) + _varint(extent)
-        + bytes(feats)
-    )
-    return _len_delim(3, layer)
+    return _encode_paths(features, layer_name, extent, 3)
 
 
 def encode_line_tile(
@@ -324,34 +320,7 @@ def encode_line_tile(
     same MoveTo/LineTo stream repeated, cursor persisting across parts
     (MVT 2.1 §4.3.5.3). Emitted in the given order — sort upstream for
     deterministic bytes."""
-    feats = bytearray()
-    for fid, parts in features:
-        geom = bytearray()
-        cx = cy = 0  # cursor persists across parts within a feature
-        for part in parts:
-            if len(part) < 2:
-                raise ValueError(f"linestring part needs >= 2 vertices, got {len(part)}")
-            x0, y0 = part[0]
-            geom += _varint(9)  # MoveTo(1)
-            geom += _varint(_zigzag(x0 - cx)) + _varint(_zigzag(y0 - cy))
-            cx, cy = x0, y0
-            geom += _varint(2 | ((len(part) - 1) << 3))  # LineTo(n-1)
-            for x, y in part[1:]:
-                geom += _varint(_zigzag(x - cx)) + _varint(_zigzag(y - cy))
-                cx, cy = x, y
-        body = (
-            _key(1, 0) + _varint(fid)
-            + _key(3, 0) + _varint(2)  # LINESTRING
-            + _len_delim(4, bytes(geom))
-        )
-        feats += _len_delim(2, body)
-    layer = (
-        _key(15, 0) + _varint(2)
-        + _len_delim(1, layer_name.encode())
-        + _key(5, 0) + _varint(extent)
-        + bytes(feats)
-    )
-    return _len_delim(3, layer)
+    return _encode_paths(features, layer_name, extent, 2)
 
 
 def _walk(buf: bytes, pos: int, end: int):
@@ -415,65 +384,40 @@ def _varints(buf: bytes, lo: int, hi: int) -> list[int]:
     return ints
 
 
-def _parse_rings(ints: list[int]) -> list[list[tuple[int, int]]]:
-    """Polygon command stream -> rings of absolute (x, y); the implied
-    ClosePath vertex is not materialized."""
-    rings: list[list[tuple[int, int]]] = []
+def _parse_paths(ints: list[int], close: bool) -> list[list[tuple[int, int]]]:
+    """Polygon (`close`) or linestring command stream -> rings or parts
+    of absolute (x, y); a ring's implied ClosePath vertex is not
+    materialized, and ClosePath is illegal in a linestring."""
+    kind = "polygon" if close else "linestring"
+    paths: list[list[tuple[int, int]]] = []
     cx = cy = 0
     i = 0
     while i < len(ints):
         cmd, count = ints[i] & 0x7, ints[i] >> 3
         i += 1
-        if cmd == 1:  # MoveTo(1) starts a ring
+        if cmd == 1:  # MoveTo(1) starts a ring / part
             if count != 1:
-                raise ValueError(f"polygon MoveTo count {count} != 1")
+                raise ValueError(f"{kind} MoveTo count {count} != 1")
             cx += _unzigzag(ints[i])
             cy += _unzigzag(ints[i + 1])
             i += 2
-            rings.append([(cx, cy)])
+            paths.append([(cx, cy)])
         elif cmd == 2:  # LineTo(n)
+            if count < 1:
+                raise ValueError(f"{kind} LineTo count must be >= 1")
             for _ in range(count):
                 cx += _unzigzag(ints[i])
                 cy += _unzigzag(ints[i + 1])
                 i += 2
-                rings[-1].append((cx, cy))
+                paths[-1].append((cx, cy))
         elif cmd == 7:  # ClosePath
-            if len(rings[-1]) < 3:
+            if not close:
+                raise ValueError("ClosePath is illegal in a LINESTRING stream")
+            if len(paths[-1]) < 3:
                 raise ValueError("ClosePath on a ring with < 3 vertices")
         else:
             raise ValueError(f"unknown geometry command {cmd}")
-    return rings
-
-
-def _parse_parts(ints: list[int]) -> list[list[tuple[int, int]]]:
-    """LineString command stream -> parts of absolute (x, y). Identical
-    to the polygon walk minus ClosePath (which is illegal here)."""
-    parts: list[list[tuple[int, int]]] = []
-    cx = cy = 0
-    i = 0
-    while i < len(ints):
-        cmd, count = ints[i] & 0x7, ints[i] >> 3
-        i += 1
-        if cmd == 1:  # MoveTo(1) starts a part
-            if count != 1:
-                raise ValueError(f"linestring MoveTo count {count} != 1")
-            cx += _unzigzag(ints[i])
-            cy += _unzigzag(ints[i + 1])
-            i += 2
-            parts.append([(cx, cy)])
-        elif cmd == 2:  # LineTo(n)
-            if count < 1:
-                raise ValueError("linestring LineTo count must be >= 1")
-            for _ in range(count):
-                cx += _unzigzag(ints[i])
-                cy += _unzigzag(ints[i + 1])
-                i += 2
-                parts[-1].append((cx, cy))
-        elif cmd == 7:
-            raise ValueError("ClosePath is illegal in a LINESTRING stream")
-        else:
-            raise ValueError(f"unknown geometry command {cmd}")
-    return parts
+    return paths
 
 
 def _decode_layers(buf: bytes) -> list[dict]:
@@ -558,21 +502,28 @@ def decode_point_tile(buf: bytes, with_attrs: bool = False) -> dict:
     return {"layers": layers}
 
 
+def _decode_paths(buf: bytes, gtype: int) -> dict:
+    """The one LINESTRING (gtype 2) / POLYGON (gtype 3) layer decode;
+    any other geometry type in the layer raises."""
+    kind = "POLYGON" if gtype == 3 else "LINESTRING"
+    layers = _decode_layers(buf)
+    for layer in layers:
+        feats = []
+        for fid, g, ints, _tags in layer["features"]:
+            if g != gtype:
+                raise NotImplementedError(
+                    f"geometry type {g} in a {kind.lower()} layer ({kind} only)"
+                )
+            feats.append((fid, _parse_paths(ints, close=gtype == 3)))
+        layer["features"] = feats
+    return {"layers": layers}
+
+
 def decode_line_tile(buf: bytes) -> dict:
     """Parse one MVT tile (linestring layers only). Returns
     {"layers": [{"name", "extent", "version", "features":
     [(id, parts)]}]} with parts of absolute (x, y) vertices."""
-    layers = _decode_layers(buf)
-    for layer in layers:
-        feats = []
-        for fid, gtype, ints, _tags in layer["features"]:
-            if gtype != 2:
-                raise NotImplementedError(
-                    f"geometry type {gtype} in a linestring layer (LINESTRING only)"
-                )
-            feats.append((fid, _parse_parts(ints)))
-        layer["features"] = feats
-    return {"layers": layers}
+    return _decode_paths(buf, 2)
 
 
 def decode_poly_tile(buf: bytes) -> dict:
@@ -580,14 +531,4 @@ def decode_poly_tile(buf: bytes) -> dict:
     {"layers": [{"name", "extent", "version", "features":
     [(id, rings)]}]} with rings of absolute (x, y) vertices (closing
     vertex implied, as encoded)."""
-    layers = _decode_layers(buf)
-    for layer in layers:
-        feats = []
-        for fid, gtype, ints, _tags in layer["features"]:
-            if gtype != 3:
-                raise NotImplementedError(
-                    f"geometry type {gtype} in a polygon layer (POLYGON only)"
-                )
-            feats.append((fid, _parse_rings(ints)))
-        layer["features"] = feats
-    return {"layers": layers}
+    return _decode_paths(buf, 3)

@@ -20,6 +20,7 @@ from ..core.tms import Tms
 from ..functions.grid_cols import (
     mercator_x,
     mercator_y,
+    xy_cols,
     xy_tile_x,
     xy_tile_y,
 )
@@ -57,26 +58,19 @@ def cover_bbox_geographic(
     bbox = tms.bbox()
     eps = F.lit(LL_EPSILON)
 
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        to_x = lambda c: mercator_x(c)  # noqa: E731
-        to_y = lambda c: mercator_y(c)  # noqa: E731
-    elif srid == 4326:
-        to_x = to_y = lambda c: c  # noqa: E731
-    else:
-        raise ValueError(f"cover supports EPSG:3857/4326 TMS, got {tms.crs()}")
+    s = F.greatest(F.col(south), F.lit(bbox.bottom)) + eps
+    n = F.least(F.col(north), F.lit(bbox.top)) - eps
 
     def x_range(wcol, ecol):
         w_ = F.greatest(wcol, F.lit(bbox.left)) + eps
         e_ = F.least(ecol, F.lit(bbox.right)) - eps
         return F.struct(
-            xy_tile_x(to_x(w_), p).alias("lo"), xy_tile_x(to_x(e_), p).alias("hi")
+            xy_tile_x(xy_cols(tms, w_, n)[0], p).alias("lo"),
+            xy_tile_x(xy_cols(tms, e_, s)[0], p).alias("hi"),
         )
 
-    s = F.greatest(F.col(south), F.lit(bbox.bottom)) + eps
-    n = F.least(F.col(north), F.lit(bbox.top)) - eps
-    ul_y = xy_tile_y(to_y(n), p)
-    lr_y = xy_tile_y(to_y(s), p)
+    ul_y = xy_tile_y(xy_cols(tms, F.col(west), n)[1], p)
+    lr_y = xy_tile_y(xy_cols(tms, F.col(east), s)[1], p)
 
     wrap = F.col(west) > F.col(east)
     x_ranges = F.when(

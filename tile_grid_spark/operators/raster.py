@@ -2,15 +2,16 @@
 
 North-rule operator. Rasterization: per-(zoom, tile_x, tile_y) group,
 paint a tile_px x tile_px uint8 raster from the points (density mask or
-mean-value band) with `applyInPandas` — numpy index arithmetic only; the
+coverage counts) through the batched group kernel
+(plans/grouped.batched_group_map) — numpy index arithmetic only; the
 tile's pixel grid comes from xy_bounds/resolution exactly as the core
 derives them. Inverse (vector <- raster): per-tile mask -> GeoJSON
 features via bbox_to_feature semantics in native to_json columns.
 
 Scale notes: groups are bounded by points-per-tile; dense tiles should be
-salted upstream (plans/skew.py) or rasterized at a deeper zoom and
-mosaicked. The output (one row per tile: ~65 KB zlib mask) is written
-partitioned by zoom, range-sorted by (tile_x, tile_y).
+salted upstream (plans/skew.py) or rasterized at a deeper zoom. The
+output (one row per tile: ~65 KB zlib mask) is written partitioned by
+zoom, range-sorted by (tile_x, tile_y).
 """
 
 from __future__ import annotations
@@ -23,7 +24,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.tms import Tms
-from ..functions.grid_cols import geo_bounds_cols, mercator_x, mercator_y, with_tile
+from ..functions.grid_cols import (
+    geo_bounds_cols,
+    mercator_x,
+    mercator_y,
+    with_tile_xy,
+    xy_cols,
+)
+from ..plans.grouped import batched_group_map
 
 RASTER_SCHEMA = (
     "zoom INT, tile_x BIGINT, tile_y BIGINT, n_points BIGINT, "
@@ -31,45 +39,6 @@ RASTER_SCHEMA = (
 )
 
 _KEYS = ("zoom", "tile_x", "tile_y")
-
-
-def _grouped_map_batched(df: DataFrame, paint_many, schema: str,
-                         num_partitions: int | None = None) -> DataFrame:
-    """Batched grouped painter: repartition+sort by tile key, then paint
-    MANY contiguous tile groups per Arrow batch in ONE python call.
-
-    applyInPandas pays tens of ms of dispatch/Arrow overhead per GROUP,
-    which dominates whenever tiles hold few rows (measured: 1500
-    single-row z10 tiles took ~8 s through applyInPandas; the painting
-    itself is microseconds). Rows of the LAST key in each batch are held
-    back and prepended to the next batch so a tile split across an Arrow
-    batch boundary is never painted twice — keys are contiguous within a
-    partition after the sort, and mapInPandas iterates one partition's
-    batches in order.
-    """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    sorted_df = df.repartition(n, *_KEYS).sortWithinPartitions(*_KEYS)
-
-    def run(batches):
-        pending = None
-        for b in batches:
-            if pending is not None and len(pending):
-                b = pd.concat([pending, b], ignore_index=True)
-                pending = None
-            if len(b) == 0:
-                continue
-            last = tuple(b.iloc[-1][k] for k in _KEYS)
-            is_last = np.ones(len(b), dtype=bool)
-            for c, v in zip(_KEYS, last):
-                is_last &= (b[c] == v).to_numpy()
-            pending = b[is_last]
-            body = b[~is_last]
-            if len(body):
-                yield paint_many(body)
-        if pending is not None and len(pending):
-            yield paint_many(pending)
-
-    return sorted_df.mapInPandas(run, schema)
 
 
 def rasterize_points(
@@ -81,39 +50,37 @@ def rasterize_points(
     lat: str = "lat",
 ) -> DataFrame:
     """Density raster per tile: mask[py, px] = clip(count, 0, 255) uint8,
-    zlib-compressed row-major. One output row per non-empty tile."""
+    zlib-compressed row-major. One output row per non-empty tile. Tiles
+    and pixels are both placed in the TMS CRS (grid_cols.xy_cols), so a
+    geographic TMS paints in its own degree frame."""
     p = tms.zoom_params(zoom)
     unit = p.resolution * float(p.tile_width)
     px_res = unit / float(tile_px)
     ox, oy = p.origin_x, p.origin_y
 
-    pts = with_tile(points, tms, zoom, lon=lon, lat=lat).withColumns(
-        {"_mx": mercator_x(lon), "_my": mercator_y(lat), "zoom": F.lit(zoom)}
+    gx, gy = xy_cols(tms, lon, lat)
+    pts = with_tile_xy(
+        points.withColumns({"_gx": gx, "_gy": gy, "zoom": F.lit(zoom)}), tms, zoom, "_gx", "_gy"
     )
 
-    def paint_many(body: pd.DataFrame) -> pd.DataFrame:
-        out = {k: [] for k in ("zoom", "tile_x", "tile_y", "n_points", "mask", "max_count")}
-        for (z, tx, ty), pdf in body.groupby(list(_KEYS), sort=False):
-            tile_minx = ox + tx * unit
-            tile_maxy = oy - ty * unit
-            ix = np.floor((pdf["_mx"].to_numpy() - tile_minx) / px_res).astype(np.int64)
-            iy = np.floor((tile_maxy - pdf["_my"].to_numpy()) / px_res).astype(np.int64)
-            ix = np.clip(ix, 0, tile_px - 1)
-            iy = np.clip(iy, 0, tile_px - 1)
-            img = np.zeros((tile_px, tile_px), dtype=np.int64)
-            np.add.at(img, (iy, ix), 1)
-            mask = np.clip(img, 0, 255).astype(np.uint8)
-            out["zoom"].append(int(z))
-            out["tile_x"].append(int(tx))
-            out["tile_y"].append(int(ty))
-            out["n_points"].append(len(pdf))
-            out["mask"].append(zlib.compress(mask.tobytes(), 1))
-            out["max_count"].append(int(img.max()))
-        return pd.DataFrame(out)
+    def paint(pdf: pd.DataFrame) -> pd.DataFrame:
+        z, tx, ty = (int(pdf[k].iloc[0]) for k in _KEYS)
+        ix = np.floor((pdf["_gx"].to_numpy() - (ox + tx * unit)) / px_res).astype(np.int64)
+        iy = np.floor(((oy - ty * unit) - pdf["_gy"].to_numpy()) / px_res).astype(np.int64)
+        img = np.zeros((tile_px, tile_px), dtype=np.int64)
+        np.add.at(img, (np.clip(iy, 0, tile_px - 1), np.clip(ix, 0, tile_px - 1)), 1)
+        return pd.DataFrame(
+            {
+                "zoom": [z],
+                "tile_x": [tx],
+                "tile_y": [ty],
+                "n_points": [len(pdf)],
+                "mask": [zlib.compress(np.clip(img, 0, 255).astype(np.uint8).tobytes(), 1)],
+                "max_count": [int(img.max())],
+            }
+        )
 
-    return _grouped_map_batched(
-        pts.select(*_KEYS, "_mx", "_my"), paint_many, RASTER_SCHEMA
-    )
+    return batched_group_map(pts.select(*_KEYS, "_gx", "_gy"), _KEYS, paint, RASTER_SCHEMA)
 
 
 FOOTPRINT_SCHEMA = (
@@ -148,9 +115,14 @@ def rasterize_footprints(
     n_footprints, true max_cover, and covered_px_sum = sum over pixels
     of the UNclipped count == sum over footprints of their clipped pixel
     area — the SQL-expressible invariant the DuckDB oracle checks.
+
+    ground_px_m is metres, so the TMS must be EPSG:3857; any other CRS
+    raises ValueError before a job runs.
     """
     from .cover import cover_bbox_xy_exact
 
+    if tms.crs().as_srid() != 3857:
+        raise ValueError(f"rasterize_footprints supports EPSG:3857 TMS, got {tms.crs()}")
     p = tms.zoom_params(zoom)
     unit = p.resolution * float(p.tile_width)
     px_res = unit / float(tile_px)
@@ -172,43 +144,37 @@ def rasterize_footprints(
         fp, tms, zoom, minx="_fminx", miny="_fminy", maxx="_fmaxx", maxy="_fmaxy"
     ).select("zoom", "tile_x", "tile_y", "_fminx", "_fmaxx", "_fminy", "_fmaxy")
 
-    def paint_many(body: pd.DataFrame) -> pd.DataFrame:
-        out = {
-            k: []
-            for k in (
-                "zoom", "tile_x", "tile_y", "n_footprints",
-                "mask", "max_cover", "covered_px_sum",
-            )
-        }
-        for (z, tx, ty), pdf in body.groupby(list(_KEYS), sort=False):
-            tminx = ox + tx * unit
-            tmaxy = oy - ty * unit
-            x0 = np.floor((pdf["_fminx"].to_numpy() - tminx) / px_res).astype(np.int64)
-            x1 = np.floor((pdf["_fmaxx"].to_numpy() - tminx) / px_res).astype(np.int64)
-            y0 = np.floor((tmaxy - pdf["_fmaxy"].to_numpy()) / px_res).astype(np.int64)
-            y1 = np.floor((tmaxy - pdf["_fminy"].to_numpy()) / px_res).astype(np.int64)
-            x0 = np.clip(x0, 0, tile_px - 1)
-            x1 = np.clip(x1, 0, tile_px - 1)
-            y0 = np.clip(y0, 0, tile_px - 1)
-            y1 = np.clip(y1, 0, tile_px - 1)
-            diff = np.zeros((tile_px + 1, tile_px + 1), dtype=np.int64)
-            np.add.at(diff, (y0, x0), 1)
-            np.add.at(diff, (y0, x1 + 1), -1)
-            np.add.at(diff, (y1 + 1, x0), -1)
-            np.add.at(diff, (y1 + 1, x1 + 1), 1)
-            img = diff.cumsum(axis=0).cumsum(axis=1)[:tile_px, :tile_px]
-            out["zoom"].append(int(z))
-            out["tile_x"].append(int(tx))
-            out["tile_y"].append(int(ty))
-            out["n_footprints"].append(len(pdf))
-            out["mask"].append(
-                zlib.compress(np.clip(img, 0, 255).astype(np.uint8).tobytes(), 1)
-            )
-            out["max_cover"].append(int(img.max()))
-            out["covered_px_sum"].append(int(img.sum()))
-        return pd.DataFrame(out)
+    def paint(pdf: pd.DataFrame) -> pd.DataFrame:
+        z, tx, ty = (int(pdf[k].iloc[0]) for k in _KEYS)
+        tminx = ox + tx * unit
+        tmaxy = oy - ty * unit
 
-    return _grouped_map_batched(cov, paint_many, FOOTPRINT_SCHEMA)
+        def px(d):  # clipped pixel index of a tile-relative CRS offset
+            return np.clip(np.floor(d / px_res).astype(np.int64), 0, tile_px - 1)
+
+        x0 = px(pdf["_fminx"].to_numpy() - tminx)
+        x1 = px(pdf["_fmaxx"].to_numpy() - tminx)
+        y0 = px(tmaxy - pdf["_fmaxy"].to_numpy())
+        y1 = px(tmaxy - pdf["_fminy"].to_numpy())
+        diff = np.zeros((tile_px + 1, tile_px + 1), dtype=np.int64)
+        np.add.at(diff, (y0, x0), 1)
+        np.add.at(diff, (y0, x1 + 1), -1)
+        np.add.at(diff, (y1 + 1, x0), -1)
+        np.add.at(diff, (y1 + 1, x1 + 1), 1)
+        img = diff.cumsum(axis=0).cumsum(axis=1)[:tile_px, :tile_px]
+        return pd.DataFrame(
+            {
+                "zoom": [z],
+                "tile_x": [tx],
+                "tile_y": [ty],
+                "n_footprints": [len(pdf)],
+                "mask": [zlib.compress(np.clip(img, 0, 255).astype(np.uint8).tobytes(), 1)],
+                "max_cover": [int(img.max())],
+                "covered_px_sum": [int(img.sum())],
+            }
+        )
+
+    return batched_group_map(cov, _KEYS, paint, FOOTPRINT_SCHEMA)
 
 
 def decode_mask(mask: bytes, tile_px: int = 256) -> np.ndarray:
@@ -238,39 +204,3 @@ def vectorize_tiles(tiles: DataFrame) -> DataFrame:
         )
     )
     return tiles.withColumn("feature", feature)
-
-
-def mosaic_to_parent(tiles: DataFrame, tile_px: int = 256) -> DataFrame:
-    """Roll four child rasters up into the parent tile (2x2 downsample by
-    summed counts, clipped to uint8). Input: rasterize_points output."""
-    child = tiles.withColumns(
-        {
-            "p_zoom": F.col("zoom") - F.lit(1),
-            "p_x": F.floor(F.col("tile_x") / 2),
-            "p_y": F.floor(F.col("tile_y") / 2),
-        }
-    )
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, px_, py_ = key
-        out = np.zeros((tile_px, tile_px), dtype=np.int64)
-        half = tile_px // 2
-        for _, row in pdf.iterrows():
-            m = decode_mask(row["mask"], tile_px).astype(np.int64)
-            # 2x2 box-sum downsample to half resolution
-            small = m.reshape(half, 2, half, 2).sum(axis=(1, 3))
-            qx = int(row["tile_x"] % 2) * half
-            qy = int(row["tile_y"] % 2) * half
-            out[qy : qy + half, qx : qx + half] += small
-        return pd.DataFrame(
-            {
-                "zoom": [int(z)],
-                "tile_x": [int(px_)],
-                "tile_y": [int(py_)],
-                "n_points": [int(pdf["n_points"].sum())],
-                "mask": [zlib.compress(np.clip(out, 0, 255).astype(np.uint8).tobytes(), 1)],
-                "max_count": [int(out.max())],
-            }
-        )
-
-    return child.groupBy("p_zoom", "p_x", "p_y").applyInPandas(merge, RASTER_SCHEMA)

@@ -28,7 +28,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..plans.grouped import batched_group_map
 
 
 def dp_keep_mask(xs: np.ndarray, ys: np.ndarray, tol: float) -> np.ndarray:
@@ -81,60 +82,28 @@ def simplify_paths(
     re-established by `order_col`, so upstream partitioning does not
     matter.
 
-    Kernel shape: mapInPandas over (id, order)-sorted partitions, MANY
-    trajectories per Arrow batch, grouped pandas-side — NOT a per-group
+    Kernel shape: the batched group kernel
+    (plans/grouped.batched_group_map) over (id, order)-sorted
+    partitions, MANY trajectories per Arrow batch — NOT a per-group
     applyInPandas: with realistic fleets (millions of short tracks) the
     per-group Arrow round trip dominates the actual RDP math (measured
-    ~2.5x on the 2000x200 bench). A trajectory whose rows straddle an
-    Arrow batch boundary is carried into the next batch (the partition
-    iterator spans all of a key's rows, so the carry always completes)."""
+    ~2.5x on the 2000x200 bench)."""
     if tolerance < 0:
         raise ValueError(f"tolerance must be >= 0, got {tolerance}")
     cols = [id_col, order_col, x, y]
-    out_schema = points.select(*cols).schema
 
-    def _simplify_block(pdf: pd.DataFrame):
-        # pdf is sorted by (id, order); groupby(sort=False) keeps it
-        out = []
-        for _tid, g in pdf.groupby(id_col, sort=False):
-            if len(g) > max_vertices:
-                raise ValueError(
-                    f"trajectory {g[id_col].iloc[0]!r} has {len(g)} vertices "
-                    f"> max_vertices={max_vertices} — pre-decimate it"
-                )
-            keep = dp_keep_mask(
-                g[x].to_numpy(dtype=np.float64),
-                g[y].to_numpy(dtype=np.float64),
-                tolerance,
+    def simplify(g: pd.DataFrame) -> pd.DataFrame:
+        if len(g) > max_vertices:
+            raise ValueError(
+                f"trajectory {g[id_col].iloc[0]!r} has {len(g)} vertices "
+                f"> max_vertices={max_vertices} — pre-decimate it"
             )
-            out.append(g.loc[keep, cols])
-        return out
+        keep = dp_keep_mask(
+            g[x].to_numpy(dtype=np.float64),
+            g[y].to_numpy(dtype=np.float64),
+            tolerance,
+        )
+        return g.loc[keep, cols]
 
-    def run(batches):
-        carry: pd.DataFrame | None = None
-        for b in batches:
-            if carry is not None and len(carry):
-                b = pd.concat([carry, b], ignore_index=True)
-            if len(b) == 0:
-                carry = None
-                continue
-            # the last id's rows may continue in the next batch: hold
-            # them back (rows are key-contiguous after the sort)
-            tail = b[id_col] == b[id_col].iloc[-1]
-            carry = b.loc[tail]
-            body = b.loc[~tail]
-            if len(body):
-                out = _simplify_block(body)
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-        if carry is not None and len(carry):
-            out = _simplify_block(carry)
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    parts = (
-        points.select(*cols)
-        .repartition(F.col(id_col))
-        .sortWithinPartitions(id_col, order_col)
-    )
-    return parts.mapInPandas(run, out_schema)
+    rows = points.select(*cols)
+    return batched_group_map(rows, [id_col], simplify, rows.schema, order=(order_col,))

@@ -6,14 +6,19 @@ addressing (/root/reference/src/tms.rs xy_bounds/tile semantics for the
 local-coordinate transform). Payload format is the public Mapbox Vector
 Tile 2.1 spec via the stdlib-only codec in functions/mvt.py.
 
-Scale shape: ONE shuffle (groupBy tile key — the same exchange any
-per-tile sink needs), then applyInPandas builds each tile's binary
-where its rows landed; feature coords are quantized to tile-local
-integers with native Column math BEFORE the shuffle, so only
-(tile, id, px, py) ints move, never raw payloads. Dense tiles are real
-data skew: cap features per tile explicitly (`max_features_per_tile`
-raises) rather than OOM inside a task — producers should roll up dense
-zooms first (operators/rollup.py).
+Scale shape: ONE shuffle on the tile key, then the batched group kernel
+(plans/grouped.batched_group_map) builds each tile's binary where its
+rows landed; feature coords are quantized to tile-local integers with
+native Column math BEFORE the shuffle, so only (tile, id, px, py) ints
+move, never raw payloads. Dense tiles are real data skew: more than
+MAX_FEATURES_PER_TILE input rows in one tile raises rather than OOM
+inside a task — producers should roll up dense zooms first
+(operators/rollup.py).
+
+Every builder shares one per-tile frame: `_stage` projects lon/lat into
+the TMS CRS (grid_cols.xy_cols) and assigns the tile, `_local_xy`
+quantizes to tile-local integers, `_tiles` runs the per-tile build under
+the one budget check, and `_tile_row` is the output row.
 
 Store maintenance (upsert_point_tiles, behind
 streaming.refresh_mvt_store) sends only the tiles a batch touches
@@ -30,12 +35,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.tms import Tms
-from ..functions.grid_cols import mercator_x, mercator_y, tile_key, xy_tile_x, xy_tile_y
+from ..core.tms import Tms, ZoomParams
+from ..functions.grid_cols import tile_key, with_tile_xy, xy_cols
 from ..functions.mvt import (
     DEFAULT_EXTENT,
     decode_line_tile,
@@ -46,55 +51,79 @@ from ..functions.mvt import (
     encode_point_tile_np,
     encode_poly_tile,
 )
+from ..plans.grouped import batched_group_map
 from .cover import cover_bbox_geographic
 
 TILES_SCHEMA = "tile_x BIGINT, tile_y BIGINT, n_features INT, mvt BINARY"
 
-# a point tile's budget of batch rows (encode_point_tiles' default,
-# upsert_point_tiles' bound)
+# every tile build's budget of input rows: points, rects or path/ring
+# vertices (in an upsert, the batch rows)
 MAX_FEATURES_PER_TILE = 2_000_000
 
 
-def _batched_group_apply(rows: DataFrame, key_cols: list[str], build) -> DataFrame:
-    """Per-group build with MANY groups per Arrow round trip: repartition
-    on the group key, sort the partition so each key's rows are
-    contiguous, then mapInPandas, calling `build(group_pdf)` (one
-    1-row-out tile builder, same contract as applyInPandas) for every
-    whole group inside an Arrow batch and carrying a boundary-straddling
-    group into the next batch. Same single exchange as
-    groupBy().applyInPandas, but the per-group Arrow round trip — which
-    dominates when groups are small (a z6 tile has ~hundreds of points,
-    a pyramid parent has <= 4 children) — is amortized over the batch
-    (measured 1.7x on the simplify bench with the identical pattern)."""
+def _stage(points: DataFrame, tms: Tms, zoom: int, lon: str, lat: str) -> DataFrame:
+    """Rows + their TMS-CRS coordinates (_gx, _gy) and tile
+    (tile_x, tile_y) at `zoom`: the staging the point and path builders
+    share."""
+    gx, gy = xy_cols(tms, lon, lat)
+    return with_tile_xy(points.withColumns({"_gx": gx, "_gy": gy}), tms, zoom, "_gx", "_gy")
 
-    def run(batches):
-        carry: pd.DataFrame | None = None
-        for b in batches:
-            if carry is not None and len(carry):
-                b = pd.concat([carry, b], ignore_index=True)
-            if len(b) == 0:
-                carry = None
-                continue
-            tail = pd.Series(True, index=b.index)
-            for k in key_cols:
-                tail &= b[k] == b[k].iloc[-1]
-            carry = b.loc[tail]
-            body = b.loc[~tail]
-            if len(body):
-                yield pd.concat(
-                    [
-                        build(g.reset_index(drop=True))
-                        for _, g in body.groupby(key_cols, sort=False)
-                    ],
-                    ignore_index=True,
-                )
-        if carry is not None and len(carry):
-            yield build(carry.reset_index(drop=True))
 
-    parts = rows.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-        *key_cols
+def _local_xy(
+    gx: Column, gy: Column, p: ZoomParams, extent: int, clamp: bool
+) -> tuple[Column, Column]:
+    """The one tile-local quantizer: TMS-CRS (gx, gy) -> INT
+    floor(frac_within_tile * extent) against the row's (tile_x, tile_y).
+    Points and paths clamp to [0, extent-1]; bbox and ring polygons do
+    not, since their vertices may lie outside the tile (the MVT
+    clip-buffer convention) — pure floor math a SQL oracle replays."""
+
+    def local(frac: Column, tile: str) -> Column:
+        raw = F.floor((frac - F.col(tile)) * F.lit(float(extent)))
+        if clamp:
+            raw = F.least(F.greatest(raw, F.lit(0)), F.lit(extent - 1))
+        return raw.cast("int")
+
+    span_x = p.resolution * float(p.tile_width)
+    span_y = p.resolution * float(p.tile_height)
+    return (
+        local((gx - F.lit(p.origin_x)) / F.lit(span_x), "tile_x"),
+        local((F.lit(p.origin_y) - gy) / F.lit(span_y), "tile_y"),
     )
-    return parts.mapInPandas(run, TILES_SCHEMA)
+
+
+def _tile_row(pdf: pd.DataFrame, n_features: int, mvt: bytes) -> pd.DataFrame:
+    """The one output row of a tile build (TILES_SCHEMA) at the group's
+    (tile_x, tile_y); no row when the tile has no features."""
+    row = pd.DataFrame(
+        {
+            "tile_x": [int(pdf.tile_x.iloc[0])],
+            "tile_y": [int(pdf.tile_y.iloc[0])],
+            "n_features": [n_features],
+            "mvt": [mvt],
+        }
+    )
+    return row if n_features else row.iloc[:0]
+
+
+def _tiles(rows: DataFrame, build) -> DataFrame:
+    """Run `build(tile_pdf) -> _tile_row(...)` once per (tile_x, tile_y)
+    group through the batched group kernel, behind the one budget
+    check: a tile with more than MAX_FEATURES_PER_TILE input rows raises
+    (rows with a stored `mvt`, in an upsert, do not count). The budget
+    is read when the plan is built."""
+    limit = MAX_FEATURES_PER_TILE
+
+    def checked(pdf: pd.DataFrame) -> pd.DataFrame:
+        n = int(pdf.mvt.isna().sum()) if "mvt" in pdf.columns else len(pdf)
+        if n > limit:
+            raise ValueError(
+                f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has {n} rows "
+                f"> max_features_per_tile={limit} — roll up or simplify before encoding"
+            )
+        return build(pdf)
+
+    return batched_group_map(rows, ("tile_x", "tile_y"), checked, TILES_SCHEMA)
 
 
 def _point_rows(
@@ -109,40 +138,15 @@ def _point_rows(
 ):
     """The JVM staging every point-tile build shares: (id, lon, lat,
     *attrs) -> (tile_x, tile_y, fid, px, py, *attr_cols) rows with the
-    tile-local coordinates quantized by native Column math, plus
+    tile-local coordinates quantized (clamped) by `_local_xy`, plus
     `tags(pdf)`, the per-row {attr: value} dicts the encoder's tag
-    dictionaries take. Local coordinates are
-    floor((frac_within_tile) * extent) clamped to [0, extent-1].
+    dictionaries take.
 
     Nullable integral/bool columns arrive in pandas as float64 (NaN for
     null), so `tags` restores the declared Spark type to get python
     natives for the codec's int/bool/float/str switch; null and NaN are
     both elided from the feature's tags."""
-    p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        gx, gy = mercator_x(lon), mercator_y(lat)
-    elif srid == 4326:
-        gx, gy = F.col(lon), F.col(lat)
-    else:
-        raise ValueError(f"point tiles support EPSG:3857/4326, got {tms.crs()}")
-    span_x = p.resolution * float(p.tile_width)
-    span_y = p.resolution * float(p.tile_height)
-
-    def local(g, origin, span, tile, flip):
-        frac = (F.lit(origin) - g) / F.lit(span) if flip else (g - F.lit(origin)) / F.lit(span)
-        raw = F.floor((frac - tile) * F.lit(float(extent)))
-        return F.least(
-            F.greatest(raw, F.lit(0)), F.lit(extent - 1)
-        ).cast("int")
-
-    staged = points.withColumns({"_gx": gx, "_gy": gy})
-    staged = staged.withColumns(
-        {
-            "tile_x": xy_tile_x(F.col("_gx"), p),
-            "tile_y": xy_tile_y(F.col("_gy"), p),
-        }
-    )
+    px, py = _local_xy(F.col("_gx"), F.col("_gy"), tms.zoom_params(zoom), extent, clamp=True)
     attr_casts = {
         c: (
             int
@@ -158,12 +162,12 @@ def _point_rows(
         )
         for c in attr_cols
     }
-    rows = staged.select(
+    rows = _stage(points, tms, zoom, lon, lat).select(
         "tile_x",
         "tile_y",
         F.col(id_col).alias("fid"),
-        local(F.col("_gx"), p.origin_x, span_x, F.col("tile_x"), False).alias("px"),
-        local(F.col("_gy"), p.origin_y, span_y, F.col("tile_y"), True).alias("py"),
+        px.alias("px"),
+        py.alias("py"),
         *[F.col(c) for c in attr_cols],
     )
 
@@ -187,18 +191,6 @@ def _point_rows(
     return rows, tags
 
 
-def _tile_row(pdf: pd.DataFrame, n_features: int, mvt: bytes) -> pd.DataFrame:
-    """The one output row of a point-tile build (TILES_SCHEMA)."""
-    return pd.DataFrame(
-        {
-            "tile_x": [int(pdf.tile_x.iloc[0])],
-            "tile_y": [int(pdf.tile_y.iloc[0])],
-            "n_features": [n_features],
-            "mvt": [mvt],
-        }
-    )
-
-
 def _encode_features(feats: dict, layer: str, extent: int) -> bytes:
     """{fid: (px, py, tags)} -> one point tile with features sorted by
     fid; the numpy encoder when no feature has tags, encode_point_tile
@@ -220,11 +212,11 @@ def _encode_features(feats: dict, layer: str, extent: int) -> bytes:
     )
 
 
-def _point_tile_build(tags, attr_cols: tuple[str, ...], layer: str, extent: int, limit: int):
+def _point_tile_build(tags, attr_cols: tuple[str, ...], layer: str, extent: int):
     """The one per-tile point encode rule, shared by encode_point_tiles
     and upsert_point_tiles. A group is one tile's batch rows (`mvt`
     absent or null) plus, in an upsert, the tile's stored binary (`mvt`
-    set). More than `limit` batch rows raises.
+    set); `_tiles` bounds the batch rows.
 
     A fid that appears more than once among the batch rows keeps ONE
     copy, the one that sorts last by (fid, px, py, *attr_cols) — nulls
@@ -240,12 +232,6 @@ def _point_tile_build(tags, attr_cols: tuple[str, ...], layer: str, extent: int,
             payloads, batch = pdf.mvt.dropna().tolist(), pdf[pdf.mvt.isna()]
         else:
             payloads, batch = [], pdf
-        if len(batch) > limit:
-            raise ValueError(
-                f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
-                f"{len(batch)} features > max_features_per_tile="
-                f"{limit} — roll up before encoding"
-            )
         fid, px, py = (batch[c].to_numpy() for c in ("fid", "px", "py"))
         order = np.lexsort((py, px, fid))  # stable: (fid, px, py) ties keep row order
         tg = tags(batch) if attr_cols else None
@@ -290,7 +276,6 @@ def encode_point_tiles(
     lat: str = "lat",
     extent: int = DEFAULT_EXTENT,
     layer: str = "points",
-    max_features_per_tile: int = MAX_FEATURES_PER_TILE,
     attr_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id, lon, lat) -> one row per non-empty tile at `zoom`:
@@ -307,8 +292,7 @@ def encode_point_tiles(
     elided from that feature's tags."""
     attr_cols = tuple(attr_cols)
     rows, tags = _point_rows(points, tms, zoom, id_col, lon, lat, extent, attr_cols)
-    build = _point_tile_build(tags, attr_cols, layer, extent, max_features_per_tile)
-    return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
+    return _tiles(rows, _point_tile_build(tags, attr_cols, layer, extent))
 
 
 def encode_bbox_poly_tiles(
@@ -322,7 +306,6 @@ def encode_bbox_poly_tiles(
     north: str = "maxy",
     extent: int = DEFAULT_EXTENT,
     layer: str = "polys",
-    max_features_per_tile: int = 2_000_000,
 ) -> DataFrame:
     """Geographic bboxes -> polygon MVT binaries, one row per covered
     tile. Each rect lands UNCLIPPED in every tile its bbox covers
@@ -335,45 +318,20 @@ def encode_bbox_poly_tiles(
     encode_point_tiles: quantize with native Columns, shuffle only
     (tile, id, 4 ints), build bytes where the rows land."""
     p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        to_x = lambda c: mercator_x(c)  # noqa: E731
-        to_y = lambda c: mercator_y(c)  # noqa: E731
-    elif srid == 4326:
-        to_x = to_y = F.col  # noqa: E731
-    else:
-        raise ValueError(
-            f"encode_bbox_poly_tiles supports EPSG:3857/4326, got {tms.crs()}"
-        )
-    span_x = p.resolution * float(p.tile_width)
-    span_y = p.resolution * float(p.tile_height)
-
-    def local_x(col):
-        frac = (to_x(col) - F.lit(p.origin_x)) / F.lit(span_x)
-        return F.floor((frac - F.col("tile_x")) * F.lit(float(extent))).cast("int")
-
-    def local_y(col):
-        frac = (F.lit(p.origin_y) - to_y(col)) / F.lit(span_y)
-        return F.floor((frac - F.col("tile_y")) * F.lit(float(extent))).cast("int")
-
+    pxw, pyn = _local_xy(*xy_cols(tms, west, north), p, extent, clamp=False)
+    pxe, pys = _local_xy(*xy_cols(tms, east, south), p, extent, clamp=False)
     covered = cover_bbox_geographic(rects, tms, zoom, west, south, east, north)
     rows = covered.select(
         "tile_x",
         "tile_y",
         F.col(id_col).alias("fid"),
-        local_x(west).alias("pxw"),
-        local_x(east).alias("pxe"),
-        local_y(north).alias("pyn"),
-        local_y(south).alias("pys"),
+        pxw.alias("pxw"),
+        pxe.alias("pxe"),
+        pyn.alias("pyn"),
+        pys.alias("pys"),
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_features_per_tile:
-            raise ValueError(
-                f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
-                f"{len(pdf)} features > max_features_per_tile="
-                f"{max_features_per_tile} — roll up before encoding"
-            )
         pdf = pdf.sort_values("fid")
         feats = [
             (
@@ -383,16 +341,9 @@ def encode_bbox_poly_tiles(
             )
             for f, xw, xe, yn, ys in zip(pdf.fid, pdf.pxw, pdf.pxe, pdf.pyn, pdf.pys)
         ]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [encode_poly_tile(feats, layer, extent)],
-            }
-        )
+        return _tile_row(pdf, len(feats), encode_poly_tile(feats, layer, extent))
 
-    return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
+    return _tiles(rows, build)
 
 
 def encode_path_tiles(
@@ -405,7 +356,6 @@ def encode_path_tiles(
     lat: str = "lat",
     extent: int = DEFAULT_EXTENT,
     layer: str = "lines",
-    max_features_per_tile: int = 2_000_000,
 ) -> DataFrame:
     """Ordered trajectories -> LINESTRING MVT binaries, one row per tile
     a path visits. Semantics are VERTEX-RUN tiling, not geometric
@@ -422,7 +372,7 @@ def encode_path_tiles(
 
     Scale shape: one exchange for the per-trajectory windows (hash by
     `id_col` — trajectories are the natural partition key and fit
-    executors by construction), then the same groupBy-tile exchange any
+    executors by construction), then the same tile exchange any
     per-tile sink needs; only (tile, id, run, seq, px, py) ints ever
     shuffle. Runs shorter than 2 vertices are dropped inside the tile
     build (no extra window pass). Reference addressing: tile/local
@@ -430,29 +380,8 @@ def encode_path_tiles(
     semantics, as in encode_point_tiles."""
     from pyspark.sql import Window
 
-    p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        gx, gy = mercator_x(lon), mercator_y(lat)
-    elif srid == 4326:
-        gx, gy = F.col(lon), F.col(lat)
-    else:
-        raise ValueError(f"encode_path_tiles supports EPSG:3857/4326, got {tms.crs()}")
-    span_x = p.resolution * float(p.tile_width)
-    span_y = p.resolution * float(p.tile_height)
-
-    def local(g, origin, span, tile, flip):
-        frac = (F.lit(origin) - g) / F.lit(span) if flip else (g - F.lit(origin)) / F.lit(span)
-        raw = F.floor((frac - tile) * F.lit(float(extent)))
-        return F.least(F.greatest(raw, F.lit(0)), F.lit(extent - 1)).cast("int")
-
-    staged = points.withColumns({"_gx": gx, "_gy": gy})
-    staged = staged.withColumns(
-        {
-            "tile_x": xy_tile_x(F.col("_gx"), p),
-            "tile_y": xy_tile_y(F.col("_gy"), p),
-        }
-    )
+    px, py = _local_xy(F.col("_gx"), F.col("_gy"), tms.zoom_params(zoom), extent, clamp=True)
+    staged = _stage(points, tms, zoom, lon, lat)
     w = Window.partitionBy(id_col).orderBy(order_col)
     # first row of a trajectory (lag null) starts run 1, as does every
     # tile change; the cumulative sum is the run index
@@ -472,17 +401,11 @@ def encode_path_tiles(
         F.col(id_col).alias("fid"),
         "run_id",
         F.col(order_col).alias("vseq"),
-        local(F.col("_gx"), p.origin_x, span_x, F.col("tile_x"), False).alias("px"),
-        local(F.col("_gy"), p.origin_y, span_y, F.col("tile_y"), True).alias("py"),
+        px.alias("px"),
+        py.alias("py"),
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_features_per_tile:
-            raise ValueError(
-                f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
-                f"{len(pdf)} vertices > max_features_per_tile="
-                f"{max_features_per_tile} — roll up before encoding"
-            )
         pdf = pdf.sort_values(["fid", "run_id", "vseq"])
         feats = []
         for fid, g in pdf.groupby("fid", sort=True):
@@ -493,20 +416,9 @@ def encode_path_tiles(
             ]
             if parts:
                 feats.append((int(fid), parts))
-        if not feats:
-            return pd.DataFrame(
-                {"tile_x": [], "tile_y": [], "n_features": [], "mvt": []}
-            ).astype({"tile_x": "int64", "tile_y": "int64", "n_features": "int32"})
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [encode_line_tile(feats, layer, extent)],
-            }
-        )
+        return _tile_row(pdf, len(feats), encode_line_tile(feats, layer, extent))
 
-    return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
+    return _tiles(rows, build)
 
 
 DECODED_SCHEMA = (
@@ -645,8 +557,9 @@ def rollup_point_tiles(tiles: DataFrame, levels: int = 1, layer: str = "points")
     re-encoded); attr-less children produce byte-identical attr-less
     parents.
 
-    Scale shape: ONE exchange per level (groupBy parent tile, <= 4 rows
-    per group); decode/encode run where the rows land via applyInPandas.
+    Scale shape: ONE exchange per level (the parent tile key, <= 4 rows
+    per group); decode/encode run where the rows land, through the
+    batched group kernel.
     """
     if levels < 1:
         raise ValueError(f"levels must be >= 1, got {levels}")
@@ -654,12 +567,12 @@ def rollup_point_tiles(tiles: DataFrame, levels: int = 1, layer: str = "points")
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
         extent = DEFAULT_EXTENT
-        for tx, ty, payload in zip(pdf.tile_x, pdf.tile_y, pdf.mvt):
+        for cx, cy, payload in zip(pdf.child_x, pdf.child_y, pdf.mvt):
             (lyr,) = decode_point_tile(bytes(payload), with_attrs=True)["layers"]
             extent = lyr["extent"]
             half = extent // 2
-            ox = (int(tx) & 1) * half
-            oy = (int(ty) & 1) * half
+            ox = (int(cx) & 1) * half
+            oy = (int(cy) & 1) * half
             rows += [
                 (fid, ox + px // 2, oy + py // 2, a)
                 for fid, px, py, a in lyr["features"]
@@ -667,30 +580,19 @@ def rollup_point_tiles(tiles: DataFrame, levels: int = 1, layer: str = "points")
         rows.sort(key=lambda r: r[:3])
         feats = [(f, x, y) for f, x, y, _ in rows]
         attrs = [a for *_, a in rows]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.ptx.iloc[0])],
-                "tile_y": [int(pdf.pty.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [
-                    encode_point_tile(
-                        feats, layer, extent,
-                        attrs=attrs if any(attrs) else None,
-                    )
-                ],
-            }
-        )
+        mvt = encode_point_tile(feats, layer, extent, attrs=attrs if any(attrs) else None)
+        return _tile_row(pdf, len(feats), mvt)
 
     out = tiles
     for _ in range(levels):
         parented = out.select(
-            "tile_x",
-            "tile_y",
+            F.shiftright("tile_x", 1).alias("tile_x"),
+            F.shiftright("tile_y", 1).alias("tile_y"),
+            F.col("tile_x").alias("child_x"),
+            F.col("tile_y").alias("child_y"),
             "mvt",
-            F.shiftright("tile_x", 1).alias("ptx"),
-            F.shiftright("tile_y", 1).alias("pty"),
         )
-        out = _batched_group_apply(parented, ["ptx", "pty"], build)
+        out = _tiles(parented, build)
     return out
 
 
@@ -745,7 +647,6 @@ def encode_ring_poly_tiles(
     lat: str = "lat",
     extent: int = DEFAULT_EXTENT,
     layer: str = "polys",
-    max_vertices_per_tile: int = 2_000_000,
 ) -> DataFrame:
     """Arbitrary-ring polygons (exploded vertex rows: one row per
     (polygon, ring, vertex), ring 0 = exterior, later rings = holes) ->
@@ -759,25 +660,13 @@ def encode_ring_poly_tiles(
     Scale shape: per-polygon bbox via groupBy(id) min/max (exchange 1);
     the bbox rows explode through the cover and join back to the vertex
     rows on the SAME id key (both sides arrive hash-partitioned by id,
-    so the join adds no exchange); then the per-tile groupBy any tile
+    so the join adds no exchange); then the per-tile exchange any tile
     sink needs (exchange 2). The real cost is the honest one — each
     polygon's vertex list replicates into each covered tile — which is
     exactly what clip-buffer payloads require; producers simplify rings
     first (operators/simplify) to bound it."""
     p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        to_x = lambda c: mercator_x(c)  # noqa: E731
-        to_y = lambda c: mercator_y(c)  # noqa: E731
-    elif srid == 4326:
-        to_x = to_y = F.col  # noqa: E731
-    else:
-        raise ValueError(
-            f"encode_ring_poly_tiles supports EPSG:3857/4326, got {tms.crs()}"
-        )
-    span_x = p.resolution * float(p.tile_width)
-    span_y = p.resolution * float(p.tile_height)
-
+    px, py = _local_xy(*xy_cols(tms, "_lon", "_lat"), p, extent, clamp=False)
     v = vertices.select(
         F.col(id_col).alias("fid"),
         F.col(ring_col).alias("ring"),
@@ -793,28 +682,10 @@ def encode_ring_poly_tiles(
     )
     covered = cover_bbox_geographic(boxes, tms, zoom).select("fid", "tile_x", "tile_y")
     rows = covered.join(v, "fid").select(
-        "tile_x",
-        "tile_y",
-        "fid",
-        "ring",
-        "vert",
-        F.floor(
-            ((to_x(F.col("_lon")) - F.lit(p.origin_x)) / F.lit(span_x) - F.col("tile_x"))
-            * F.lit(float(extent))
-        ).cast("int").alias("px"),
-        F.floor(
-            ((F.lit(p.origin_y) - to_y(F.col("_lat"))) / F.lit(span_y) - F.col("tile_y"))
-            * F.lit(float(extent))
-        ).cast("int").alias("py"),
+        "tile_x", "tile_y", "fid", "ring", "vert", px.alias("px"), py.alias("py")
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_vertices_per_tile:
-            raise ValueError(
-                f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
-                f"{len(pdf)} vertices > max_vertices_per_tile="
-                f"{max_vertices_per_tile} — simplify rings before encoding"
-            )
         pdf = pdf.sort_values(["fid", "ring", "vert"])
         feats = []
         for fid, g in pdf.groupby("fid", sort=True):
@@ -823,16 +694,9 @@ def encode_ring_poly_tiles(
                 for _, r in g.groupby("ring", sort=True)
             ]
             feats.append((int(fid), rings))
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [encode_poly_tile(feats, layer, extent)],
-            }
-        )
+        return _tile_row(pdf, len(feats), encode_poly_tile(feats, layer, extent))
 
-    return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
+    return _tiles(rows, build)
 
 
 def upsert_point_tiles(
@@ -851,7 +715,7 @@ def upsert_point_tiles(
     Only the tiles the batch touches cross into Python. The batch's
     packed tile keys left-semi-join the stored tiles; those stored
     binaries and the batch's quantized point rows (the staging
-    encode_point_tiles uses) go through ONE _batched_group_apply pass
+    encode_point_tiles uses) go through ONE batched group pass
     with encode_point_tiles' per-tile rule (_point_tile_build): decode
     the stored tile (tags included), overlay the batch points by fid —
     the batch wins — and re-encode sorted by fid. Every other stored
@@ -891,8 +755,8 @@ def upsert_point_tiles(
     untouched = old_tiles.join(keys, on, "left_anti").select(
         "tile_x", "tile_y", "n_features", "mvt"
     )
-    build = _point_tile_build(tags, attr_cols, "points", extent, MAX_FEATURES_PER_TILE)
-    return _batched_group_apply(merge_in, ["tile_x", "tile_y"], build).unionByName(untouched)
+    build = _point_tile_build(tags, attr_cols, "points", extent)
+    return _tiles(merge_in, build).unionByName(untouched)
 
 
 def tiles_for_viewport(
