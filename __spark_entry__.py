@@ -2405,8 +2405,7 @@ def q_bbox_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"maxx": F.col("minx") + F.lit(21.0), "maxy": F.col("miny") + F.lit(17.0)}
     )
     return bbox_overlap_join(
-        sup, nat, WM, zoom=5, left_id="s_suppkey", right_id="n_nationkey",
-        broadcast_right=True,
+        sup, nat, WM, zoom=5, left_id="s_suppkey", right_id="n_nationkey"
     ).orderBy("s_suppkey", "n_nationkey")
 
 

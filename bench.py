@@ -8,9 +8,9 @@ Extras carry the throughput numbers BASELINE.md commits to
 (tile-assignments/sec, PIP-join rows/sec). Results are forced with the
 noop sink so nothing is collected to the driver.
 
-Scaling evidence (local[8] vs local[32]) is produced by
-scripts/scaling_bench.py, which shells out to this file at two
-parallelism levels — see BENCH/BASELINE.md.
+This is the per-query regression gate; the repository benchmark is
+perfbench/ (BENCHMARK.json). The r6 scaling evidence (local[8] vs
+local[32]) is frozen in BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -40,9 +40,9 @@ ALL_ZOOMS = list(range(25))
 # which measures scheduler overhead, not engine throughput.
 SCALE_ROWS = int(os.environ.get("SPARK_GRAFT_SCALE_ROWS", "40000000"))
 # The PIP probe and the checksum-consumed assignment have very different
-# per-row costs, so PIP gets its own row count (scaling_bench.py sets
-# both explicitly so each job runs long enough to measure scaling, not
-# fixed job-submission overhead).
+# per-row costs, so PIP gets its own row count (set both explicitly so
+# each job runs long enough to measure scaling, not fixed job-submission
+# overhead).
 PIP_SCALE_ROWS = int(
     os.environ.get("SPARK_GRAFT_PIP_ROWS", str(SCALE_ROWS * 8))
 )
@@ -65,8 +65,8 @@ SF_REP = int(os.environ.get("SPARK_GRAFT_SF_REP", "8"))
 # runs BENCH_REPEATS times with CPU-calibration probes BRACKETING each
 # rep; per-query time is the MIN across reps (same work, so min = least
 # contaminated) and the probe rates ship in the JSON so a slow snapshot
-# is distinguishable from a slow engine. scripts/scaling_bench.py sets
-# repeats=1 — it brackets externally with its own interleave protocol.
+# is distinguishable from a slow engine. An external A/B harness that
+# brackets runs itself can set repeats=1.
 BENCH_REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2"))
 
 _CAL_CODE = (
@@ -78,8 +78,7 @@ _CAL_CODE = (
 
 def cal_probe(n_procs: int | None = None) -> float:
     """Outcome-independent quietness signal: aggregate completions/sec of
-    n fixed-work pure-CPU subprocesses (no JVM/Spark) — the same probe
-    scripts/scaling_bench.py brackets its pairs with, sized ~1s."""
+    n fixed-work pure-CPU subprocesses (no JVM/Spark), sized ~1s."""
     import subprocess
 
     n = n_procs or min(CPUS, 32)

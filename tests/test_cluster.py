@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import tile_grid_spark.operators.cluster as C
 from tile_grid_spark.operators.cluster import connected_components
 
 
@@ -46,6 +47,27 @@ def _bigint_df(spark, edges):
     return spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "id_a BIGINT, id_b BIGINT"
     )
+
+
+def _tier_counters(monkeypatch):
+    """Count the driver-side solve calls: `_star_rounds` runs only in
+    tier 3 (global rounds) and the driver's `_uf_star_arrays` call only
+    in tier 2 (the partitions' calls run in Python workers and never
+    reach these lists)."""
+    rounds, driver_uf = [], []
+    real_rounds, real_uf = C._star_rounds, C._uf_star_arrays
+
+    def counting_rounds(*a):
+        rounds.append(1)
+        return real_rounds(*a)
+
+    def counting_uf(*a):
+        driver_uf.append(1)
+        return real_uf(*a)
+
+    monkeypatch.setattr(C, "_star_rounds", counting_rounds)
+    monkeypatch.setattr(C, "_uf_star_arrays", counting_uf)
+    return rounds, driver_uf
 
 
 def _run(spark, edges, nodes=None):
@@ -92,18 +114,21 @@ class TestConnectedComponents:
         got = _run(spark, [], nodes=[1, 2, 3])
         assert got == {1: 1, 2: 2, 3: 3}
 
-    def test_max_iter_raises(self, spark):
+    def test_max_iter_raises(self, spark, monkeypatch):
         edges = [(i, i + 1) for i in range(64)]
         e = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT")
-        # global star rounds (frontier tiers disabled) can't close a
-        # 64-chain in one round -> must raise, not return wrong labels
-        with pytest.raises(RuntimeError, match="converge"):
-            connected_components(e, max_iter=1, frontier_max_nodes=0)
+        default_cap = C.FRONTIER_MAX_NODES
+        monkeypatch.setattr(C, "MAX_STAR_ROUNDS", 1)
+        # global star rounds (a frontier cap of 0 forces them) can't
+        # close a 64-chain in one round -> must raise, not return wrong
+        # labels
+        monkeypatch.setattr(C, "FRONTIER_MAX_NODES", 0)
+        with pytest.raises(RuntimeError, match="converge.*MAX_STAR_ROUNDS=1"):
+            connected_components(e)
         # the frontier driver-solve tier needs no rounds at all: the
-        # same graph converges even at max_iter=1
-        got = {
-            r.node: r.component for r in connected_components(e, max_iter=1).collect()
-        }
+        # same graph converges even at one round
+        monkeypatch.setattr(C, "FRONTIER_MAX_NODES", default_cap)
+        got = {r.node: r.component for r in connected_components(e).collect()}
         assert got == _union_find(edges)
 
     def test_huge_hub_star_skew(self, spark):
@@ -175,8 +200,6 @@ class TestPreContraction:
     def test_every_id_type_is_pre_contracted(self, spark, monkeypatch):
         """BIGINT and STRING ids are each pre-contracted exactly once,
         with the union-find labels; any other id type raises."""
-        import tile_grid_spark.operators.cluster as C
-
         calls = []
         real = C._contract_partitions
 
@@ -211,13 +234,19 @@ class TestPreContraction:
         # connectivity is preserved: same components as the original
         assert _union_find(rows) == _union_find(edges)
 
-    def test_frontier_equals_global_rounds_on_random_graphs(self, spark):
-        """The frontier quotient solve (default) must label identically
-        to full global star rounds (frontier_max_nodes=0) and to the
-        union-find oracle — random graphs mix chains, hubs and
-        cross-partition components; BIGINT and STRING ids alike."""
+    def test_frontier_equals_global_rounds_on_random_graphs(self, spark, monkeypatch):
+        """Every solve tier labels identically to the union-find oracle —
+        random graphs mix chains, hubs and cross-partition components;
+        BIGINT and STRING ids alike, at frontier caps {default, 1, 0}.
+        One partition leaves no frontier (tier 1), the default cap
+        solves the frontier on the driver (tier 2), and caps 1 and 0
+        force global star rounds (tier 3); the counters prove each tier
+        ran."""
+        rounds, driver_uf = _tier_counters(monkeypatch)
+        caps = (C.FRONTIER_MAX_NODES, 1, 0)
+        tiers = set()
         rng = np.random.default_rng(41)
-        for parts in (2, 9, 32):
+        for parts in (1, 9, 32):
             n = 250
             edges = [
                 tuple(int(x) for x in p)
@@ -225,28 +254,36 @@ class TestPreContraction:
                 if p[0] != p[1]
             ]
             edges += [(i, i + 1) for i in range(200, 240)]
+            want = _union_find(edges)
             for make in (_bigint_df, _padded_df):
                 e = make(spark, edges).repartition(parts)
-                a = _labels(connected_components(e))  # frontier default
-                b = _labels(connected_components(e, frontier_max_nodes=0))
-                assert a == b == _union_find(edges), (parts, make)
+                for cap in caps:
+                    monkeypatch.setattr(C, "FRONTIER_MAX_NODES", cap)
+                    rounds.clear()
+                    driver_uf.clear()
+                    assert _labels(connected_components(e)) == want, (parts, make, cap)
+                    tiers.add(3 if rounds else 2 if driver_uf else 1)
+        assert tiers == {1, 2, 3}
 
-    def test_frontier_cap_falls_back_to_global_rounds(self, spark):
-        """frontier_max_nodes=1 forces the star-round tiers: the
-        global-round fallback (a 300-chain: frontier > cap) and the
-        distributed frontier rounds (a 3-chain split over 2 partitions:
-        one frontier node, two frontier edges) — identical labels,
-        BIGINT and STRING ids alike."""
+    def test_frontier_cap_falls_back_to_global_rounds(self, spark, monkeypatch):
+        """A frontier cap of 1 sends both graphs to global star rounds:
+        a 300-chain (frontier nodes > cap) and a 3-chain split over 2
+        partitions (one frontier node, but two frontier edges > cap) —
+        union-find labels, BIGINT and STRING ids alike."""
+        rounds, _ = _tier_counters(monkeypatch)
+        monkeypatch.setattr(C, "FRONTIER_MAX_NODES", 1)
         chain = [(i, i + 1) for i in range(300)]
         for make in (_bigint_df, _padded_df):
+            rounds.clear()
             e = make(spark, chain).repartition(16)
-            got = _labels(connected_components(e, frontier_max_nodes=1))
+            got = _labels(connected_components(e))
             assert got == _union_find(chain), make
             assert set(got.values()) == {0}
             # one row per partition: (0, 1) and (1, 2) contract apart
             e = make(spark, [(0, 1), (1, 2)]).coalesce(1).repartition(2)
-            got = _labels(connected_components(e, frontier_max_nodes=1))
+            got = _labels(connected_components(e))
             assert got == {0: 0, 1: 0, 2: 0}, make
+            assert len(rounds) == 2, make
 
     def test_string_min_is_code_point_min(self, spark):
         """Non-ASCII STRING ids: numpy's code-point sort (union-find in

@@ -33,17 +33,6 @@ def test_registry_and_oracle_agree():
     )
 
 
-def test_plan_dump_list_stays_in_registry():
-    """scripts/dump_plans.py QUERIES must all exist in the registry —
-    a renamed/removed query would silently drop its plan evidence from
-    BENCH/PLANS.md on the next regeneration."""
-    import scripts.dump_plans as dp
-
-    q = set(entry.queries())
-    missing = [n for n in dp.QUERIES if n not in q]
-    assert not missing, missing
-
-
 def test_user_sessions_matches_pandas(spark, sf_dir):
     got = (
         entry.q_user_sessions(spark, sf_dir)

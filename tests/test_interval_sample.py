@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+import tile_grid_spark.operators.interval_join as IJ
 from tile_grid_spark.operators.interval_join import interval_join
 from tile_grid_spark.operators.sample import SAMPLE_MOD, stratified_sample
 
@@ -154,16 +155,40 @@ class TestIntervalJoin:
         # and the result is still the brute-force containment
         assert out.count() == sum(1 for i in range(200) if i * 10 < 7200)
 
-    def test_broadcast_false_keeps_shuffle_shape(self, spark):
+    def test_over_cap_keeps_shuffle_shape(self, spark, monkeypatch):
+        monkeypatch.setattr(IJ, "BROADCAST_MAX_ROWS", 0)
         ev = _mk_events(spark, [(0, 0.0)])
         iv = _mk_intervals(spark, [(0, 0.0, 7200.0)])
         plan = interval_join(
             ev, iv, left_ts="ts", start="start", end="end", on=("key",),
-            width_sec=3600, broadcast_intervals=False,
+            width_sec=3600,
         )._jdf.queryExecution().executedPlan().toString()
         assert "NestedLoop" not in plan and "CartesianProduct" not in plan
 
-    def test_broadcast_results_equal_shuffle_results(self, spark):
+    def test_probe_counts_exploded_rows(self, spark, monkeypatch):
+        """10 intervals of 50 buckets each explode to 500 rows: over a
+        cap of 100 the join must shuffle, although the interval count
+        alone (10) is under it. Catalyst's own size-based broadcast is
+        off, so only the operator's probe decides."""
+        monkeypatch.setattr(IJ, "BROADCAST_MAX_ROWS", 100)
+        ev = _mk_events(spark, [(k, float(k * 3600)) for k in range(10)])
+        iv = _mk_intervals(spark, [(k, 0.0, 49.5 * 3600) for k in range(10)])
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            out = interval_join(
+                ev, iv, left_ts="ts", start="start", end="end", on=("key",),
+                width_sec=3600,
+            )
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" not in plan, plan
+            assert out.count() == 10
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    def test_broadcast_results_equal_shuffle_results(self, spark, monkeypatch):
+        """The auto-probe on each side of the cap: broadcast under it,
+        shuffled over it, the same pairs either way."""
         rng = random.Random(7)
         events = [(rng.randrange(3), rng.uniform(0, 30_000)) for _ in range(150)]
         intervals = [
@@ -172,12 +197,11 @@ class TestIntervalJoin:
         ]
         kw = dict(left_ts="ts", start="start", end="end", on=("key",), width_sec=3600)
         a = interval_join(
-            _mk_events(spark, events), _mk_intervals(spark, intervals),
-            broadcast_intervals=True, **kw,
+            _mk_events(spark, events), _mk_intervals(spark, intervals), **kw
         )
+        monkeypatch.setattr(IJ, "BROADCAST_MAX_ROWS", 0)
         b = interval_join(
-            _mk_events(spark, events), _mk_intervals(spark, intervals),
-            broadcast_intervals=False, **kw,
+            _mk_events(spark, events), _mk_intervals(spark, intervals), **kw
         )
         key = lambda r: (r.event_id, r.iv_id)  # noqa: E731
         assert sorted(map(key, a.collect())) == sorted(map(key, b.collect()))

@@ -68,6 +68,53 @@ class TestPlanShapes:
         assert "BroadcastHashJoin" in plan, plan
         assert "SortMergeJoin" not in plan
 
+    def test_join_broadcast_hints(self, spark, wm):
+        """With Catalyst's size-based broadcast off, only the operators'
+        own hints decide: rect_contains_join and bbox_overlap_join always
+        broadcast their rect / right cover side, radius_join never
+        broadcasts its right side (a shuffled join AQE can skew-split)."""
+        from tile_grid_spark.operators.knn import radius_join
+        from tile_grid_spark.operators.overlap_join import bbox_overlap_join
+        from tile_grid_spark.operators.pip_join import rect_contains_join
+
+        pts = spark.range(500).select(
+            F.col("id").alias("pid"),
+            (F.col("id") % 360 - 180.0).cast("double").alias("lon"),
+            (F.col("id") % 160 - 80.0).cast("double").alias("lat"),
+        )
+        boxes = spark.range(8).select(
+            F.col("id").alias("rect_id"),
+            (F.col("id") * 20.0 - 90.0).alias("minx"),
+            F.lit(-20.0).alias("miny"),
+            (F.col("id") * 20.0 - 80.0).alias("maxx"),
+            F.lit(20.0).alias("maxy"),
+        )
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            rect = plan_of(rect_contains_join(pts, boxes, wm, 4))
+            overlap = plan_of(
+                bbox_overlap_join(
+                    boxes.withColumnRenamed("rect_id", "l_id"),
+                    boxes.withColumnRenamed("rect_id", "r_id"),
+                    wm,
+                    4,
+                )
+            )
+            radius = plan_of(
+                radius_join(
+                    pts.withColumnRenamed("pid", "left_id"),
+                    pts.withColumnRenamed("pid", "right_id"),
+                    wm,
+                    50_000.0,
+                )
+            )
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert "BroadcastHashJoin" in rect, rect
+        assert "BroadcastHashJoin" in overlap, overlap
+        assert "Broadcast" not in radius, radius
+
     def test_pip_shuffle_path_keeps_rings_out_of_tile_shuffle(self, spark, wm):
         """broadcast_polys=False: the tile-key join must move only
         (tile_key, poly_id) — ring arrays re-attach by poly_id AFTER the

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tile_grid_spark.core import tms
+import tile_grid_spark.operators.knn as K
 from tile_grid_spark.operators.knn import knn_join
 from tile_grid_spark.operators.pip_join import (
     generate_polygons,
@@ -263,33 +264,35 @@ class TestKnn:
             n_cross += sum(1 for i in order if (qlon[qid] > 0) != (clon[int(i)] > 0))
         assert n_cross > 0
 
-    def test_tail_broadcasts_and_caps(self, spark, wm):
-        # far-apart queries/candidates with max_ring=1 -> brute-force tail;
+    def test_tail_broadcasts_and_caps(self, spark, wm, monkeypatch):
+        # far-apart queries/candidates with MAX_RING=1 -> brute-force tail;
         # the small candidate side must be broadcast (BNLJ), and the pair
         # cap must refuse oversized cartesians instead of running them
         q, *_ = make_points(spark, n=10, seed=51, lon_range=(100, 110), lat_range=(0, 10))
         c, *_ = make_points(spark, n=50, seed=52, lon_range=(-110, -100), lat_range=(0, 10))
         q = q.withColumnRenamed("pid", "query_id")
         c = c.withColumnRenamed("pid", "cand_id")
-        got = knn_join(q, c, wm, zoom=10, k=2, max_ring=1)
+        monkeypatch.setattr(K, "MAX_RING", 1)
+        got = knn_join(q, c, wm, zoom=10, k=2)
         plan = got._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" in plan
         assert "CartesianProduct" not in plan
         assert got.groupBy("query_id").count().filter("count != 2").isEmpty()
-        with pytest.raises(ValueError, match="max_tail_pairs"):
-            knn_join(q, c, wm, zoom=10, k=2, max_ring=1, max_tail_pairs=10)
+        monkeypatch.setattr(K, "MAX_TAIL_PAIRS", 10)
+        with pytest.raises(ValueError, match="MAX_TAIL_PAIRS=10"):
+            knn_join(q, c, wm, zoom=10, k=2)
 
-    def test_all_queries_get_k(self, spark, wm):
+    def test_all_queries_get_k(self, spark, wm, monkeypatch):
         q, *_ = make_points(spark, n=40, seed=31, lon_range=(100, 170), lat_range=(-80, 80))
         c, *_ = make_points(spark, n=500, seed=32, lon_range=(-170, -100), lat_range=(-80, 80))
         # candidates far from queries: forces escalation + brute-force tail
+        monkeypatch.setattr(K, "MAX_RING", 4)
         got = knn_join(
             q.withColumnRenamed("pid", "query_id"),
             c.withColumnRenamed("pid", "cand_id"),
             wm,
             zoom=10,
             k=3,
-            max_ring=4,
         )
         counts = got.groupBy("query_id").count().collect()
         assert len(counts) == 40

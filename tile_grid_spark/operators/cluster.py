@@ -15,8 +15,12 @@ groupBy-min shuffles over the edge list and nothing else — no
 driver-side graph, no per-task state beyond a grouped min.
 
 Ids are integral or UTF8_BINARY STRING, and both take one path
-(partition-local pre-contraction, then the frontier tiers): numpy's
-code-point str order is Spark's UTF8_BINARY order.
+(partition-local pre-contraction, then three solve tiers — an empty
+cross-partition frontier is the answer; a frontier within
+FRONTIER_MAX_NODES nodes and edges is solved by a driver union-find;
+else global star rounds, at most MAX_STAR_ROUNDS, plus a distributed
+star-forest guard): numpy's code-point str order is Spark's
+UTF8_BINARY order.
 
 Scale notes:
 - Each round shuffles (node, neighbor) id pairs only; `distinct`
@@ -45,6 +49,9 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, StringType
 from pyspark.sql.window import Window
+
+MAX_STAR_ROUNDS = 30  # the bound is O(log^2 n) w.h.p.; 30 covers any corpus
+FRONTIER_MAX_NODES = 2_000_000  # driver union-find cap: frontier nodes and edges
 
 
 def _canonical(e: DataFrame) -> DataFrame:
@@ -171,36 +178,47 @@ def _contract_partitions(e: DataFrame) -> DataFrame:
     return e.mapInPandas(run, e.schema)
 
 
-def _star_rounds(
-    e: DataFrame,
-    prev: tuple[int, int],
-    max_iter: int,
-) -> tuple[DataFrame, tuple[int, int]]:
-    """Alternating large/small star rounds until the canonical edge-set
-    checksum reaches a fixed point. `e` must already be checkpointed
-    with `prev` its checksum. Raises on non-convergence."""
-    converged = prev[0] == 0
-    for _ in range(max_iter):
-        if converged:
-            return e, prev
-        e, cur = _checkpoint_with_checksum(_canonical(_small_star(_large_star(e))))
-        converged = cur == prev
-        prev = cur
-    if not converged:
+def _conflict_nodes(e: DataFrame) -> DataFrame:
+    """Nodes `n` that break the min-rooted star-forest shape of a
+    canonical edge set: a child that is also a parent (chained) or has
+    two parents. One endpoint explode + groupBy."""
+    return (
+        _endpoint_flags(e)
+        .groupBy("n")
+        .agg(F.sum("p").alias("np"), F.sum("c").alias("nc"))
+        .filter((F.col("nc") > 0) & ((F.col("np") > 0) | (F.col("nc") > 1)))
+        .select("n")
+    )
+
+
+def _star_rounds(e: DataFrame, prev: tuple[int, int]) -> DataFrame:
+    """Tier 3: alternating large/small star rounds until the canonical
+    edge-set checksum reaches a fixed point (`e` checkpointed, `prev`
+    its checksum). A fixed point of S∘L must also BE a star forest, so
+    one endpoint-explode exchange then checks the converged set (no
+    chained node, no two-parent child — what licenses the shuffle-free
+    comp assembly). Raises on non-convergence or a non-star result."""
+    for _ in range(MAX_STAR_ROUNDS):
+        nxt, cur = _checkpoint_with_checksum(_canonical(_small_star(_large_star(e))))
+        if cur == prev:
+            break
+        e, prev = nxt, cur
+    else:
         raise RuntimeError(
             f"connected_components: star rounds did not converge after "
-            f"{max_iter} iterations ({prev[0]} edges) — raise max_iter"
+            f"MAX_STAR_ROUNDS={MAX_STAR_ROUNDS} rounds ({prev[0]} edges)"
         )
-    return e, prev
+    non_star = _conflict_nodes(nxt).count()
+    if non_star:
+        raise RuntimeError(
+            "connected_components: converged edge set is not a star "
+            f"forest ({non_star} chained/multi-parent nodes)"
+        )
+    return nxt
 
 
-def _solve_frontier(
-    E: DataFrame,
-    prev: tuple[int, int],
-    max_iter: int,
-    frontier_max_nodes: int,
-) -> tuple[DataFrame, tuple[int, int], bool]:
-    """Solve the quotient graph: global star rounds over ONLY the edges
+def _solve_frontier(E: DataFrame, prev: tuple[int, int]) -> DataFrame:
+    """Solve the quotient graph: a driver union-find over ONLY the edges
     incident to a CONFLICT node, then rewire the settled stars through
     the solved frontier with one broadcast join. `E` must be the
     checkpointed canonical output of partition-local pre-contraction
@@ -222,51 +240,28 @@ def _solve_frontier(
     and the remap (child -> root) covers it; if u stayed a root (or
     never touched the frontier) the coalesce keeps u. Children stay
     unique across the final set (frontier children are disjoint from
-    settled children) and every root is a component minimum; the
-    post-convergence star-forest guard still verifies the result at
-    runtime instead of trusting this argument.
+    settled children) and every root is a component minimum.
 
     Cost: one skinny endpoint groupBy + a solve of the conflict
     subgraph + map-side broadcast splits/rewire of the checkpointed E.
-    The solve itself is tiered: when S is empty E already IS the
-    answer; when the frontier edge set fits the same cap it is solved
-    ON THE DRIVER with the identical vectorized union-find (a star
-    round costs ~0.5s of pure job overhead regardless of size — for a
-    few-MB quotient graph the driver solve replaces 3+ rounds with one
-    Arrow collect); when it exceeds the cap but S still broadcasts,
-    distributed star rounds run over just the frontier subgraph; and
-    when S itself exceeds `frontier_max_nodes` (hash-scattered edges at
-    extreme scale, where the broadcast would not fit) it falls back to
-    full global rounds — identical labels through every tier,
-    property-tested.
-
-    Returns (edges, checksum, guarded): guarded=True means the star-
-    forest + child-uniqueness invariants were already verified HERE —
-    in the driver tier the frontier forest is checked in numpy on the
-    exact arrays the union-find produced (u∩v empty, v unique), and
-    the settled side needs no pass at all: a settled child has nc == 1
-    and np == 0 over ALL of E by the S predicate, so it appears in no
-    other edge of either family, and a settled parent that the
-    frontier merged is remapped to its frontier root (u ∈ fe ⇒ u is a
-    node of the solved forest) while one that never touched fe has
-    nc == 0 and stays a root. The caller then skips the distributed
-    endpoint-explode guard — one full pass over the converged edge set
-    (r6: measured ~15-20% of cc wall at bench scale, pure guard)."""
-    sym = _endpoint_flags(E)
-    S, n_frontier = _checkpoint_with_count(
-        sym.groupBy("n")
-        .agg(F.sum("p").alias("np"), F.sum("c").alias("nc"))
-        .filter((F.col("nc") > 0) & ((F.col("np") > 0) | (F.col("nc") > 1)))
-        .select("n")
-    )
+    Three tiers, identical labels through each (property-tested):
+      1. S empty: E IS the answer (S's filter is the guard predicate).
+      2. S and its frontier edges each within FRONTIER_MAX_NODES: one
+         Arrow collect + the same vectorized union-find ON THE DRIVER
+         (a star round costs ~0.5s of job overhead at any size). Its
+         forest is checked in numpy (u∩v empty, v unique); the settled
+         side needs no pass: a settled child has nc == 1 and np == 0
+         over ALL of E, so it appears in no other edge, and a settled
+         parent is either remapped to its frontier root (u ∈ fe ⇒ u is
+         a node of the solved forest) or has nc == 0 and stays a root.
+         So the distributed guard (r6: ~15-20% of cc wall) is skipped.
+      3. Otherwise (hash-scattered edges at extreme scale): global star
+         rounds over all of E, with the distributed guard."""
+    S, n_frontier = _checkpoint_with_count(_conflict_nodes(E))
     if n_frontier == 0:
-        # E is already a min-rooted star forest: the global answer.
-        # S's filter IS the guard predicate (chained/multi-parent
-        # endpoint detection over all of E), so zero frontier nodes ==
-        # the guard already passed — no second endpoint pass needed.
-        return E, prev, True
-    if n_frontier > frontier_max_nodes:
-        return (*_star_rounds(E, prev, max_iter), False)
+        return E
+    if n_frontier > FRONTIER_MAX_NODES:
+        return _star_rounds(E, prev)
     su = F.broadcast(S.select(F.col("n").alias("_fn"), F.lit(True).alias("_fu")))
     sv = F.broadcast(S.select(F.col("n").alias("_gn"), F.lit(True).alias("_fv")))
     flagged = (
@@ -278,38 +273,32 @@ def _solve_frontier(
     is_front = F.col("_fu").isNotNull() | F.col("_fv").isNotNull()
     fe = flagged.filter(is_front).select("u", "v")
     settled = flagged.filter(~is_front).select("u", "v")
-    # capped collect: limit(cap+1) decides driver-vs-distributed AND
+    # capped collect: limit(cap+1) decides driver-vs-global AND
     # delivers the rows in the SAME action (the interval_join probe
     # pattern) — previously a full count pass preceded the toPandas
     # pass, re-running the broadcast-flag scan of E for nothing
-    pdf = fe.limit(frontier_max_nodes + 1).toPandas()
-    guarded = len(pdf) <= frontier_max_nodes
-    if guarded:
-        # quotient graph fits the driver: one Arrow collect + the same
-        # vectorized union-find the partitions ran, zero round jobs.
-        # The star-forest invariants are checked RIGHT HERE on the
-        # exact arrays (docstring's settled-side argument covers the
-        # rewired edges), so the caller's distributed guard is skipped.
-        import numpy as np
-        import pandas as pd
+    pdf = fe.limit(FRONTIER_MAX_NODES + 1).toPandas()
+    if len(pdf) > FRONTIER_MAX_NODES:
+        return _star_rounds(E, prev)
+    # quotient graph fits the driver: one Arrow collect + the same
+    # vectorized union-find the partitions ran, zero round jobs.
+    import numpy as np
+    import pandas as pd
 
-        ru, rv = _uf_star_arrays(pdf["u"].to_numpy(), pdf["v"].to_numpy())
-        if len(np.intersect1d(ru, rv)) or len(np.unique(rv)) != len(rv):
-            raise RuntimeError(
-                "connected_components: driver union-find emitted a "
-                "non-star frontier forest (internal invariant)"
-            )
-        f = E.sparkSession.createDataFrame(pd.DataFrame({"u": ru, "v": rv}), E.schema)
-    else:
-        f, fprev = _checkpoint_with_checksum(fe)
-        f, fprev = _star_rounds(f, fprev, max_iter)
+    ru, rv = _uf_star_arrays(pdf["u"].to_numpy(), pdf["v"].to_numpy())
+    if len(np.intersect1d(ru, rv)) or len(np.unique(rv)) != len(rv):
+        raise RuntimeError(
+            "connected_components: driver union-find emitted a "
+            "non-star frontier forest (internal invariant)"
+        )
+    f = E.sparkSession.createDataFrame(pd.DataFrame({"u": ru, "v": rv}), E.schema)
     remap = F.broadcast(f.select(F.col("v").alias("_rn"), F.col("u").alias("_rr")))
     final = f.unionByName(
         settled.join(remap, settled["u"] == remap["_rn"], "left").select(
             F.coalesce(F.col("_rr"), F.col("u")).alias("u"), "v"
         )
     )
-    return (*_checkpoint_with_checksum(final), guarded)
+    return final.localCheckpoint()
 
 
 def _endpoint_flags(e: DataFrame) -> DataFrame:
@@ -367,8 +356,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     nodes: DataFrame | None = None,
-    max_iter: int = 30,
-    frontier_max_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Connected components of the undirected graph given by `edges`.
 
@@ -379,8 +366,7 @@ def connected_components(
 
     `nodes` (optional, single column `id`) adds isolated vertices that
     appear in no edge; they map to themselves. Raises RuntimeError if
-    the star rounds have not converged after `max_iter` (the paper's
-    bound is O(log^2 n) w.h.p.; 30 covers any realistic corpus).
+    the star rounds have not converged after MAX_STAR_ROUNDS.
 
     Ids must be integral or STRING with the default UTF8_BINARY
     collation (a STRING component is its code-point-minimal id, the
@@ -390,19 +376,14 @@ def connected_components(
     enter the star rounds and chains local to a partition collapse
     immediately.
 
-    `frontier_max_nodes` (default 2M; 0 disables): after contraction,
-    a node seen by exactly ONE partition had its whole neighborhood
-    contracted locally — its star is globally final. Global star rounds
-    therefore only need the edges touching the cross-partition frontier
-    (nodes seen by >=2 partitions). When the frontier fits a broadcast
-    (<= frontier_max_nodes), the rounds run on that quotient subgraph
-    and the settled stars are rewired with one broadcast join — on
-    locality-preserving inputs (range-partitioned ingest, band-bucketed
-    candidate pairs) the frontier is a fraction of a percent of the
-    edges. Above the cap (e.g. fully hash-scattered edges at 10^12
-    scale) it falls back to global rounds — same results either way,
-    property-tested, and the post-convergence star-forest +
-    child-uniqueness guards verify the construction at runtime.
+    After contraction, a node seen by exactly ONE partition had its
+    whole neighborhood contracted locally — its star is globally final.
+    Only the cross-partition frontier still needs solving, in one of
+    the three tiers of _solve_frontier; on locality-preserving inputs
+    (range-partitioned ingest, band-bucketed candidate pairs) it is a
+    fraction of a percent of the edges, so the driver tiers are the
+    common case and global rounds the fallback for hash-scattered
+    edges at 10^12 scale.
     """
     e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     canon0 = e0.select(
@@ -420,37 +401,8 @@ def connected_components(
     # subgraph where the union-find or the per-round _canonical collapses
     # it; settled edges (nc == 1) are dup-free by definition.
     e, prev = _checkpoint_with_checksum(_contract_partitions(canon0))
-    if frontier_max_nodes > 0 and prev[0] > 0:
-        e, prev, guarded = _solve_frontier(e, prev, max_iter, frontier_max_nodes)
-    else:
-        e, prev = _star_rounds(e, prev, max_iter)
-        guarded = False
-    if prev[0] > 0 and not guarded:
-        # A checksum fixed point of S∘L (or the distributed frontier
-        # construction) must also BE a star forest before we read
-        # components off the edges: in canonical (min, max) form a star
-        # forest has no node in both the parent (u) and child (v)
-        # columns AND no child with two parents. ONE endpoint-explode
-        # exchange checks both (the previous two-distinct-join shape
-        # cost three exchanges); the child-uniqueness check is what
-        # licenses the shuffle-free comp assembly below. Tiers that
-        # already proved the invariants (empty frontier == the guard
-        # predicate itself; driver union-find checked on its arrays +
-        # the settled-side argument) skip this pass — it re-read the
-        # whole converged edge set only to verify it (r6).
-        non_star = (
-            _endpoint_flags(e)
-            .groupBy("n")
-            .agg(F.sum("p").alias("np"), F.sum("c").alias("nc"))
-            .filter((F.col("nc") > 0) & ((F.col("np") > 0) | (F.col("nc") > 1)))
-            .count()
-        )
-        if non_star:
-            raise RuntimeError(
-                "connected_components: converged edge set is not a star "
-                f"forest ({non_star} chained/multi-parent nodes) — raise "
-                "max_iter"
-            )
+    if prev[0] > 0:
+        e = _solve_frontier(e, prev)
     # converged canonical edges are (root=component min, child). The
     # guard proved children unique and disjoint from roots, so the
     # child rows need NO aggregation at all (zero shuffle) — only the

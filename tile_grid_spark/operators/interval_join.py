@@ -26,8 +26,7 @@ meets each contained event in just the event's own bucket).
 Width tunes the classic space/selectivity tradeoff: width ≈ median
 interval length keeps the explode factor ~2 while keeping buckets
 selective. Hot buckets (skewed event times) are spread by the `on`
-keys; for keyless joins against few huge intervals, prefer a broadcast
-of the exploded interval side (automatic under AQE when small).
+keys; a small exploded interval side is broadcast (see interval_join).
 
 `max_buckets_per_interval` is the explode budget: a malformed interval
 (year-long window at 1s width) would fan out unboundedly, so the bound
@@ -41,6 +40,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+BROADCAST_MAX_ROWS = 100_000  # exploded interval rows that still broadcast
 
 
 def _bucket(ts: Column, width_sec: int) -> Column:
@@ -64,8 +65,6 @@ def interval_join(
     on: Sequence[str] = (),
     width_sec: int = 3600,
     max_buckets_per_interval: int = 100_000,
-    broadcast_intervals: bool | None = None,
-    broadcast_threshold: int = 100_000,
 ) -> DataFrame:
     """Inner-join each left row to every interval containing its
     timestamp: `start <= left_ts < end` (half-open, so back-to-back
@@ -78,17 +77,17 @@ def interval_join(
     range predicate). Column names must not collide across the two
     frames apart from the `on` keys (raises otherwise).
 
-    `broadcast_intervals`: the common attribution shape is a HUGE event
-    table against a tiny window table — there, shuffling the events on
-    the bucket key is the whole cost, and broadcasting the exploded
-    interval side turns the plan into a BroadcastHashJoin with ZERO
-    left-side exchange. None (default) auto-decides with a capped count
-    probe (`intervals.limit(threshold+1).count()` — LocalLimit
-    short-circuits the scan, so the probe is O(threshold), never a full
-    pass): at most `broadcast_threshold` interval rows -> broadcast.
-    Pass True/False to force either shape (True for a side you know is
-    small, False when interval attributes are wide enough to blow the
-    broadcast memory budget)."""
+    The common attribution shape is a HUGE event table against a tiny
+    window table — there, shuffling the events on the bucket key is the
+    whole cost, and broadcasting the exploded interval side turns the
+    plan into a BroadcastHashJoin with ZERO left-side exchange. A capped
+    count probe of the EXPLODED rows decides (`limit(cap+1).count()` —
+    LocalLimit short-circuits the scan, so the probe is O(cap), never a
+    full pass): at most BROADCAST_MAX_ROWS bucket rows -> broadcast,
+    otherwise no hint (the planner's own size estimate decides, a
+    shuffled join on (keys, _b) for large sides). Probing the exploded
+    rows, not the intervals, bounds what is actually broadcast: each
+    interval explodes to up to `max_buckets_per_interval` rows."""
     overlap = (set(left.columns) & set(intervals.columns)) - set(on)
     if overlap:
         raise ValueError(
@@ -123,13 +122,15 @@ def interval_join(
     # source (events attributed to event-derived windows), bare df[col]
     # references resolve to the SAME attribute and the key equality
     # silently degenerates to a trivially-true predicate
-    if broadcast_intervals is None:
-        broadcast_intervals = (
-            intervals.limit(broadcast_threshold + 1).count() <= broadcast_threshold
-        )
     l = l.alias("_ij_l")
     i = i.alias("_ij_r")
-    if broadcast_intervals:
+    # probe the EXPLODED rows a broadcast ships, each interval clipped
+    # at cap+1 buckets: the same verdict as counting `i`, but nothing
+    # fans out past the cap and the explode budget still fires in `i`
+    probe = intervals.filter(F.col(end) > F.col(start)).select(
+        F.explode(F.sequence(bs, F.least(be, bs + BROADCAST_MAX_ROWS)))
+    )
+    if probe.limit(BROADCAST_MAX_ROWS + 1).count() <= BROADCAST_MAX_ROWS:
         i = F.broadcast(i)
     lc = lambda c: F.col(f"_ij_l.`{c}`")  # noqa: E731
     rc = lambda c: F.col(f"_ij_r.`{c}`")  # noqa: E731

@@ -35,6 +35,10 @@ from pyspark.sql.window import Window
 from ..core.tms import Tms, ZoomParams
 from ..functions.grid_cols import mercator_x, mercator_y, with_tile
 
+MAX_RING = 16  # widest escalation ring (tiles) before the brute-force tail
+TAIL_BROADCAST_ROWS = 2_000_000  # the tail broadcasts a side of at most this
+MAX_TAIL_PAIRS = 10_000_000_000  # the tail refuses more pending x candidate pairs
+
 
 def _ring_explode(
     df: DataFrame, r: int, p: ZoomParams, wrap_x: bool, r_exclude: int | None = None
@@ -76,20 +80,18 @@ def knn_join(
     cand_id: str = "cand_id",
     lon: str = "lon",
     lat: str = "lat",
-    max_ring: int = 16,
-    broadcast_threshold_rows: int = 2_000_000,
-    max_tail_pairs: int | None = 10_000_000_000,
 ) -> DataFrame:
     """Exact k nearest candidates per query (Mercator-plane metric,
     antimeridian-wrapped on global grids).
 
     Returns (query_id, cand_id, dist, rank). Driver-side escalation loop;
     each round is localCheckpoint()ed so both the data AND the logical
-    plan of prior rounds are never re-derived (plan-blowup guard). The
-    brute-force tail broadcasts whichever side fits under
-    `broadcast_threshold_rows` and refuses (raises) beyond
-    `max_tail_pairs` pending x candidate pairs — the one place a
-    cartesian could survive at scale is bounded, not silent.
+    plan of prior rounds are never re-derived (plan-blowup guard). Rings
+    grow 1 -> 4 -> 16 up to MAX_RING; queries still pending then go to a
+    brute-force tail that broadcasts whichever side fits under
+    TAIL_BROADCAST_ROWS and refuses (raises) beyond MAX_TAIL_PAIRS
+    pending x candidate pairs — the one place a cartesian could survive
+    at scale is bounded, not silent.
     """
     from ..core.model import meters_per_unit
 
@@ -141,7 +143,7 @@ def knn_join(
     r = 1
     # with wrap, rings wider than the matrix would duplicate wrapped
     # tiles; such zooms go straight to the (tiny-matrix) brute force
-    while r <= max_ring and (not wrap_x or 2 * r + 1 <= p.matrix_width):
+    while r <= MAX_RING and (not wrap_x or 2 * r + 1 <= p.matrix_width):
         ringed = _ring_explode(pending, r, p, wrap_x)
         joined = ringed.join(c, on="_jk", how="inner").withColumn("dist", dist)
         topk = (
@@ -183,22 +185,22 @@ def knn_join(
         # survive a 100x scale-up.
         n_c = c.count()
         n_p = pending.count()
-        if max_tail_pairs is not None and n_p * n_c > max_tail_pairs:
+        if n_p * n_c > MAX_TAIL_PAIRS:
             raise ValueError(
                 f"kNN brute-force tail is {n_p} pending x {n_c} candidates "
-                f"= {n_p * n_c} pairs > max_tail_pairs={max_tail_pairs}; "
-                "raise max_ring (more escalation rounds) or max_tail_pairs"
+                f"= {n_p * n_c} pairs > MAX_TAIL_PAIRS={MAX_TAIL_PAIRS}; "
+                "a coarser zoom lets the rings reach these neighbors"
             )
-        if n_c <= broadcast_threshold_rows:
+        if n_c <= TAIL_BROADCAST_ROWS:
             cj = pending.crossJoin(F.broadcast(c))
-        elif n_p <= broadcast_threshold_rows:
+        elif n_p <= TAIL_BROADCAST_ROWS:
             cj = c.crossJoin(F.broadcast(pending))
         else:
             raise ValueError(
                 f"kNN brute-force tail: neither side fits the broadcast "
-                f"threshold ({n_p} pending, {n_c} candidates, threshold "
-                f"{broadcast_threshold_rows}); raise max_ring so the ring "
-                "join handles these queries"
+                f"threshold ({n_p} pending, {n_c} candidates, "
+                f"TAIL_BROADCAST_ROWS={TAIL_BROADCAST_ROWS}); a coarser "
+                "zoom lets the rings reach these neighbors"
             )
         tail = (
             cj.withColumn("dist", dist)
@@ -233,7 +235,6 @@ def radius_join(
     lon: str = "lon",
     lat: str = "lat",
     zoom: int | None = None,
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """All (left, right) pairs within `radius` Mercator-plane meters —
     the WITHIN-DISTANCE companion of knn_join (same metric, same
@@ -256,17 +257,12 @@ def radius_join(
       tiles are distinct). Constant 9x build fan-out, candidate volume
       ~ sum_t |L_ring(t)|*|R(t)| — local density, never |L|x|R| — and
       the exact-distance verify is native Column math inside the join.
-      Dense-tile key skew is runtime-handled by AQE skew-join splitting.
+      The join is shuffled, never a broadcast hint, so dense-tile key
+      skew is runtime-handled by AQE skew-join splitting.
 
     Raises when no zoom gives a wrap-safe cover (radius within a factor
     ~4 of the world width): such a predicate matches a constant fraction
     of the globe per row — use bbox_overlap/cross strategies explicitly.
-
-    `broadcast_right=True` hints the right-side tile index into a
-    broadcast hash join (LongHashedRelation on the packed key): the
-    9x-exploded LEFT side then never shuffles at all. Callers assert
-    the right side fits a broadcast (e.g. dbscan's capped |points|
-    probe); the default keeps the shuffled join AQE can skew-split.
     """
     from ..core.model import meters_per_unit
     from ..functions.grid_cols import tile_key
@@ -319,8 +315,6 @@ def radius_join(
     ).withColumns({"cx": mercator_x(lon), "cy": mercator_y(lat)}).select(
         right_id, tile_key("tile_x", "tile_y").alias("_jk"), "cx", "cy"
     )
-    if broadcast_right:
-        r = F.broadcast(r)
     ringed = _ring_explode(l, 1, p, wrap_x)
     adx = F.abs(F.col("qx") - F.col("cx"))
     dx_eff = F.least(adx, F.lit(world_w) - adx) if wrap_x else adx

@@ -67,7 +67,6 @@ def bbox_overlap_join(
     zoom: int,
     left_id: str = "l_id",
     right_id: str = "r_id",
-    broadcast_right: bool | None = None,
 ) -> DataFrame:
     """Pairs (left_id, right_id) whose boxes overlap (open intervals,
     matching the reference's intersect_tms: touching edges do NOT join).
@@ -75,8 +74,8 @@ def bbox_overlap_join(
     Both inputs need columns (id, minx, miny, maxx, maxy) in geographic
     degrees; antimeridian-crossing boxes (minx > maxx) are decomposed
     into two arcs row-locally, so wrap x plain and wrap x wrap pairs
-    join correctly. broadcast_right: force/forbid broadcasting the right
-    cover (None = let Catalyst/AQE decide).
+    join correctly. The right cover is always broadcast, so pass the
+    smaller layer as `right` (the left side then never shuffles).
     """
     lc = cover_bbox_geographic(
         _split_wrap_arcs(left.select(F.col(left_id).alias("_lid"), *_BOX)), tms, zoom
@@ -98,8 +97,6 @@ def bbox_overlap_join(
         F.col("maxx").alias("_rmaxx"),
         F.col("maxy").alias("_rmaxy"),
     )
-    if broadcast_right:
-        rc = F.broadcast(rc)
 
     overlap = (
         (F.col("_lminx") < F.col("_rmaxx"))
@@ -108,7 +105,7 @@ def bbox_overlap_join(
         & (F.col("_lmaxy") > F.col("_rminy"))
     )
     return (
-        lc.join(rc, "_tk")
+        lc.join(F.broadcast(rc), "_tk")
         .filter(overlap)
         .select(F.col("_lid").alias(left_id), F.col("_rid").alias(right_id))
         .distinct()

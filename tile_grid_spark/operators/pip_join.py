@@ -159,14 +159,14 @@ def rect_contains_join(
     south: str = "miny",
     east: str = "maxx",
     north: str = "maxy",
-    broadcast_rects: bool = True,
 ) -> DataFrame:
     """Point-in-rectangle join where rectangles may CROSS THE ANTIMERIDIAN
     (west > east, reference split semantics tms.rs:717-724).
 
     Plan: cover prefilter (cover_bbox_geographic splits wrap boxes into two
     x-ranges row-locally) -> equi-join on the packed tile key -> exact
-    wrap-aware longitude test, all native Columns (no UDF). The cover's two
+    wrap-aware longitude test, all native Columns (no UDF). The rect
+    cover is always broadcast, so the points never shuffle. The cover's two
     split ranges can land on the same tile at coarse zooms (faithful
     duplicate in the reference iterator), so the prefilter dedupes
     (tile, rect) pairs to keep join output exact.
@@ -202,15 +202,13 @@ def rect_contains_join(
     rect_side = cov.select(
         tile_key("tile_x", "tile_y").alias("_tk"), rect_id, west, south, east, north
     ).dropDuplicates(["_tk", rect_id])
-    if broadcast_rects:
-        rect_side = F.broadcast(rect_side)
     lon_ok = F.when(
         F.col(west) <= F.col(east),
         (F.col(lon) >= F.col(west)) & (F.col(lon) <= F.col(east)),
     ).otherwise((F.col(lon) >= F.col(west)) | (F.col(lon) <= F.col(east)))
     lat_ok = (F.col(lat) >= F.col(south)) & (F.col(lat) <= F.col(north))
     return (
-        pts.join(rect_side, on="_tk", how="inner")
+        pts.join(F.broadcast(rect_side), on="_tk", how="inner")
         .filter(lon_ok & lat_ok)
         .select(*points.columns, rect_id)
     )

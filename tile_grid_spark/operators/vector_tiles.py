@@ -31,7 +31,7 @@ bytes.
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -427,32 +427,48 @@ DECODED_SCHEMA = (
 )
 
 
+def _decode_stats(
+    tiles: DataFrame,
+    schema: str,
+    decode: Callable[[bytes], dict],
+    stats: Callable[[list], tuple],
+) -> DataFrame:
+    """Shared driver of the decode_*_stats checks: re-parse each tile's
+    MVT with `decode` and emit one row per tile — the passthrough tile
+    address, `stats(features)` of its single layer, then the layer
+    extent — under `schema` ("name TYPE, ..." in that column order)."""
+    cols = [f.split()[0] for f in schema.split(", ")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            rows = []
+            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
+                (layer,) = decode(bytes(payload))["layers"]
+                fs = layer["features"]
+                rows.append((int(tx), int(ty), *stats(fs), int(layer["extent"])))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(run, schema)
+
+
+def _id_range(fs: list) -> tuple[int, int]:
+    return min(f[0] for f in fs), max(f[0] for f in fs)
+
+
+def _vertex_stats(fs: list) -> tuple:
+    """(n_vertices, min_id, max_id, sum_px, sum_py) over features whose
+    geometry is a list of vertex sequences (polygon rings, line parts)."""
+    verts = [v for _, geom in fs for seq in geom for v in seq]
+    return len(verts), *_id_range(fs), sum(v[0] for v in verts), sum(v[1] for v in verts)
+
+
 def decode_tile_stats(tiles: DataFrame) -> DataFrame:
     """Re-parse the MVT binaries and aggregate what they CONTAIN —
     everything except the passthrough tile address is recomputed from
     the bytes, so any encoder/wire bug surfaces as a value mismatch."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "n_features", "min_id", "max_id",
-                "sum_px", "sum_py", "extent",
-            )}
-            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
-                d = decode_point_tile(bytes(payload))
-                (layer,) = d["layers"]
-                fs = layer["features"]
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["n_features"].append(len(fs))
-                out["min_id"].append(min(f[0] for f in fs))
-                out["max_id"].append(max(f[0] for f in fs))
-                out["sum_px"].append(sum(f[1] for f in fs))
-                out["sum_py"].append(sum(f[2] for f in fs))
-                out["extent"].append(int(layer["extent"]))
-            yield pd.DataFrame(out)
-
-    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(run, DECODED_SCHEMA)
+    return _decode_stats(tiles, DECODED_SCHEMA, decode_point_tile, lambda fs: (
+        len(fs), *_id_range(fs), sum(f[1] for f in fs), sum(f[2] for f in fs)
+    ))
 
 
 POLY_DECODED_SCHEMA = (
@@ -466,31 +482,8 @@ def decode_poly_stats(tiles: DataFrame) -> DataFrame:
     (cumulative deltas and all) and aggregate the absolute ring vertices
     the bytes encode — the oracle re-derives the same quantities from
     the quantization formula, so a delta/winding/wire bug mismatches."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "n_features", "n_vertices", "min_id",
-                "max_id", "sum_px", "sum_py", "extent",
-            )}
-            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
-                d = decode_poly_tile(bytes(payload))
-                (layer,) = d["layers"]
-                fs = layer["features"]
-                verts = [v for _, rings in fs for ring in rings for v in ring]
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["n_features"].append(len(fs))
-                out["n_vertices"].append(len(verts))
-                out["min_id"].append(min(f[0] for f in fs))
-                out["max_id"].append(max(f[0] for f in fs))
-                out["sum_px"].append(sum(v[0] for v in verts))
-                out["sum_py"].append(sum(v[1] for v in verts))
-                out["extent"].append(int(layer["extent"]))
-            yield pd.DataFrame(out)
-
-    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(
-        run, POLY_DECODED_SCHEMA
+    return _decode_stats(
+        tiles, POLY_DECODED_SCHEMA, decode_poly_tile, lambda fs: (len(fs), *_vertex_stats(fs))
     )
 
 
@@ -507,33 +500,9 @@ def decode_line_stats(tiles: DataFrame) -> DataFrame:
     absolute vertices the bytes encode — the oracle re-derives the same
     quantities from the quantization + run-split windows, so a delta,
     part-boundary, or wire bug mismatches on values."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "n_features", "n_parts", "n_vertices",
-                "min_id", "max_id", "sum_px", "sum_py", "extent",
-            )}
-            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
-                d = decode_line_tile(bytes(payload))
-                (layer,) = d["layers"]
-                fs = layer["features"]
-                verts = [v for _, parts in fs for part in parts for v in part]
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["n_features"].append(len(fs))
-                out["n_parts"].append(sum(len(parts) for _, parts in fs))
-                out["n_vertices"].append(len(verts))
-                out["min_id"].append(min(f[0] for f in fs))
-                out["max_id"].append(max(f[0] for f in fs))
-                out["sum_px"].append(sum(v[0] for v in verts))
-                out["sum_py"].append(sum(v[1] for v in verts))
-                out["extent"].append(int(layer["extent"]))
-            yield pd.DataFrame(out)
-
-    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(
-        run, LINE_DECODED_SCHEMA
-    )
+    return _decode_stats(tiles, LINE_DECODED_SCHEMA, decode_line_tile, lambda fs: (
+        len(fs), sum(len(parts) for _, parts in fs), *_vertex_stats(fs)
+    ))
 
 
 def rollup_point_tiles(tiles: DataFrame, levels: int = 1, layer: str = "points") -> DataFrame:
@@ -609,30 +578,18 @@ def decode_attr_stats(tiles: DataFrame, int_key: str, str_key: str) -> DataFrame
     string attribute — so a dictionary-index, value-typing, or tag-pair
     bug mismatches against the oracle's relational re-derivation."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "n_features", "min_id", "max_id",
-                "sum_attr", "n_cats", "max_cat", "extent",
-            )}
-            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
-                d = decode_point_tile(bytes(payload), with_attrs=True)
-                (layer,) = d["layers"]
-                fs = layer["features"]
-                cats = sorted({f[3][str_key] for f in fs if str_key in f[3]})
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["n_features"].append(len(fs))
-                out["min_id"].append(min(f[0] for f in fs))
-                out["max_id"].append(max(f[0] for f in fs))
-                out["sum_attr"].append(sum(f[3].get(int_key, 0) for f in fs))
-                out["n_cats"].append(len(cats))
-                out["max_cat"].append(cats[-1] if cats else None)
-                out["extent"].append(int(layer["extent"]))
-            yield pd.DataFrame(out)
+    def stats(fs: list) -> tuple:
+        cats = sorted({f[3][str_key] for f in fs if str_key in f[3]})
+        return (
+            len(fs),
+            *_id_range(fs),
+            sum(f[3].get(int_key, 0) for f in fs),
+            len(cats),
+            cats[-1] if cats else None,
+        )
 
-    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(
-        run, ATTR_DECODED_SCHEMA
+    return _decode_stats(
+        tiles, ATTR_DECODED_SCHEMA, lambda b: decode_point_tile(b, with_attrs=True), stats
     )
 
 
