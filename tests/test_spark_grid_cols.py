@@ -398,3 +398,33 @@ class TestRelatives:
         m = {(r.tile_x, r.tile_y): r["count"] for r in out}
         assert m[(0, 0)] == 3
         assert m[(2, 2)] == 8
+
+
+class TestTileKeyPredicate:
+    def test_selects_what_tile_key_isin_selects(self, spark):
+        """tile_key_in_sql(keys) picks the same rows as the Column
+        tile_key(...).isin(packed keys), on random keys with the index
+        range ends 0 and 2^28 - 1, for dense and sparse key sets."""
+        top = (1 << 28) - 1
+        rng = np.random.default_rng(17)
+        ends = [[0, 0], [0, top], [top, 0], [top, top]]
+        pool = np.concatenate([rng.integers(0, 1 << 28, (40, 2)), ends])
+        # candidate rows: the pool's x and y values crossed, so the
+        # per-column INs alone let through rows the packed-key IN trims
+        rows = sorted({(int(x), int(y)) for x in pool[:, 0] for y in pool[:, 1]})
+        df = spark.createDataFrame(rows, "tile_x BIGINT, tile_y BIGINT").union(
+            spark.createDataFrame([(None, 0), (0, None)], "tile_x BIGINT, tile_y BIGINT")
+        )
+        for picked in (pool[:25], pool[-4:], pool[[0, 40, 43]], pool[:0]):
+            keys = {(int(x), int(y)) for x, y in picked}
+            packed = [(x << 28) + y for x, y in keys]
+            pred = G.tile_key_in_sql(keys)
+            isin = G.tile_key("tile_x", "tile_y").isin(packed)
+            want = sorted(map(tuple, df.where(isin).collect()))
+            got = sorted(map(tuple, df.where(pred).collect()))
+            assert got == want and len(got) == len(keys)
+            # the null-safe negation keeps every other row, null keys included
+            rest = df.where(f"NOT coalesce({pred}, false)").count()
+            assert rest == df.count() - len(keys)
+        with pytest.raises(ValueError, match="tile indices"):
+            G.tile_key_in_sql([(0, 1 << 28)])

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import glob
+import os
+import re
 
 import numpy as np
 import pytest
@@ -57,6 +59,22 @@ class TestMvtCodec:
             encode_point_tile_np([1], [4096], [0], "pts", 4096)
         with pytest.raises(ValueError, match="non-negative"):
             encode_point_tile_np([-1], [0], [0], "pts", 4096)
+
+    @pytest.mark.parametrize("n", [0, 1, 3, 63, 64, 65])
+    def test_np_encoder_parity_by_size(self, n):
+        """Byte parity at the tile sizes where a size-dependent path
+        would switch, for one-byte and multi-byte varint widths."""
+        from tile_grid_spark.functions.mvt import encode_point_tile_np
+
+        rng = np.random.default_rng(n)
+        for id_hi, extent in ((100, 64), (1 << 40, 4096), (1 << 63, 1 << 30)):
+            fids = np.sort(rng.integers(0, id_hi, n, dtype=np.uint64).astype(np.int64))
+            px = rng.integers(0, extent, n)
+            py = rng.integers(0, extent, n)
+            scalar = encode_point_tile(
+                [(int(f), int(x), int(y)) for f, x, y in zip(fids, px, py)], "p", extent
+            )
+            assert encode_point_tile_np(fids, px, py, "p", extent) == scalar
 
     def test_roundtrip(self):
         feats = [(0, 0, 0), (7, 4095, 4095), (1 << 40, 2048, 17)]
@@ -940,16 +958,86 @@ class TestUpsertPointTiles:
         refresh_mvt_store(store, spark.createDataFrame(batch, self.SCHEMA), wm, 4)
         got = _store_bytes(spark, store)
         assert got[bad] == b"\xff\xff" and len(got) == len(rows) + 1
+        touched = {(t.x, t.y) for t in (wm.tile(x, y, 4) for _, x, y, _ in batch)}
 
         plan = (
             upsert_point_tiles(
                 spark.read.parquet(store), spark.createDataFrame(batch, self.SCHEMA), wm, 4
             )
             ._jdf.queryExecution().optimizedPlan().toString()
+        ).splitlines()
+        assert not any("Join" in ln for ln in plan)
+        # the MapInPandas subtree: the lines below it, indented deeper
+        (top,) = [i for i, ln in enumerate(plan) if "MapInPandas" in ln]
+        depth = len(plan[top]) - len(plan[top].lstrip(":+- "))
+        sub = []
+        for ln in plan[top + 1 :]:
+            if len(ln) - len(ln.lstrip(":+- ")) <= depth:
+                break
+            sub.append(ln)
+        # its one stored-tile scan sits under the touched-key predicate
+        scans = [i for i, ln in enumerate(sub) if "Relation" in ln and "parquet" in ln]
+        assert len(scans) == 1
+        filt = sub[scans[0] - 1]
+        assert "Filter" in filt
+        for col in ("tile_x", "tile_y"):  # the optimizer writes a one-value IN as =
+            vals = ",".join(str(v) for v in sorted({t[col == "tile_y"] for t in touched}))
+            assert re.search(rf"{col}#\d+L (IN \({vals}\)|= {vals}\))", filt), filt
+
+    def test_empty_batch_keeps_store_bytes(self, spark, wm, tmp_path):
+        """No touched tile: the predicate selects nothing (SQL has no
+        empty IN-list) and its null-safe negation keeps every tile."""
+        from tile_grid_spark.streaming.stream import refresh_mvt_store
+
+        base, _ = self._fixture(wm)
+        store = str(tmp_path / "store")
+        refresh_mvt_store(store, spark.createDataFrame(base, self.SCHEMA), wm, 4)
+        before = _store_bytes(spark, store)
+        refresh_mvt_store(store, spark.createDataFrame([], self.SCHEMA), wm, 4)
+        assert _store_bytes(spark, store) == before
+
+    def test_batch_of_new_tiles_only(self, spark, wm, tmp_path):
+        """A batch that touches no stored tile adds its tiles and copies
+        every stored one."""
+        from tile_grid_spark.operators.vector_tiles import encode_point_tiles
+        from tile_grid_spark.streaming.stream import refresh_mvt_store
+
+        base, _ = self._fixture(wm)
+        store = str(tmp_path / "store")
+        refresh_mvt_store(store, spark.createDataFrame(base, self.SCHEMA), wm, 4)
+        before = _store_bytes(spark, store)
+        fresh = [(900 + k, 100.0 + 22.5 * k, -40.0, None) for k in range(3)]
+        assert not {(t.x, t.y) for t in (wm.tile(x, y, 4) for _, x, y, _ in fresh)} & set(
+            before
         )
-        semi = [ln for ln in plan.splitlines() if "Join LeftSemi" in ln]
-        assert semi and "tile_x" in semi[0] and "tile_y" in semi[0]
-        assert any("Join LeftAnti" in ln for ln in plan.splitlines())
+        refresh_mvt_store(store, spark.createDataFrame(fresh, self.SCHEMA), wm, 4)
+        added = {
+            (r.tile_x, r.tile_y): bytes(r.mvt)
+            for r in encode_point_tiles(
+                spark.createDataFrame(fresh, self.SCHEMA), wm, 4
+            ).collect()
+        }
+        assert len(added) == 3 and _store_bytes(spark, store) == {**before, **added}
+
+    def test_batch_over_tile_cap_raises_before_write(self, spark, wm, tmp_path, monkeypatch):
+        """More distinct batch tiles than MAX_REFRESH_TILES raise while
+        the refresh is planned: nothing is written and the live store
+        keeps its bytes."""
+        from tile_grid_spark.operators import vector_tiles
+        from tile_grid_spark.streaming.stream import refresh_mvt_store
+
+        base, batch = self._fixture(wm)  # the batch touches 4 tiles
+        store = str(tmp_path / "store")
+        refresh_mvt_store(store, spark.createDataFrame(base, self.SCHEMA), wm, 4)
+        before = _store_bytes(spark, store)
+        monkeypatch.setattr(vector_tiles, "MAX_REFRESH_TILES", 3)
+        with pytest.raises(ValueError, match="MAX_REFRESH_TILES"):
+            refresh_mvt_store(store, spark.createDataFrame(batch, self.SCHEMA), wm, 4)
+        assert not os.path.exists(store + ".tmp") and not os.path.exists(store + ".old")
+        assert _store_bytes(spark, store) == before
+        monkeypatch.setattr(vector_tiles, "MAX_REFRESH_TILES", 4)
+        refresh_mvt_store(store, spark.createDataFrame(batch, self.SCHEMA), wm, 4)
+        assert len(_store_bytes(spark, store)) == len(before) + 1
 
     def test_duplicate_fids_are_deterministic(self, spark, wm, tmp_path):
         """Same pid several times in one batch tile: the copy that sorts
@@ -1028,3 +1116,60 @@ class TestUpsertPointTiles:
         monkeypatch.setattr(vector_tiles, "MAX_FEATURES_PER_TILE", 2)
         with pytest.raises(Exception, match="max_features_per_tile"):
             upsert_point_tiles(old, batch, wm, 3).collect()
+
+
+class TestServeDriverBudget:
+    """The driver work of the serve request path: py4j round trips per
+    call (each costs ~0.1-0.2 ms, and a Column-built IN-list or staging
+    projection costs hundreds of them) and Spark jobs per refresh."""
+
+    @staticmethod
+    def _round_trips(fn) -> int:
+        import gc
+
+        import py4j.clientserver as cs
+
+        n = [0]
+        send = cs.ClientServerConnection.send_command
+
+        def counting(self, *args, **kwargs):
+            n[0] += 1
+            return send(self, *args, **kwargs)
+
+        # py4j frees a proxy with a round trip when Python collects it:
+        # collect the earlier tests' garbage first, and hold the cyclic
+        # collector so the count is the call's own
+        gc.collect()
+        gc.disable()
+        try:
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(cs.ClientServerConnection, "send_command", counting)
+                fn()
+        finally:
+            gc.enable()
+        return n[0]
+
+    def test_viewport_and_refresh_budgets(self, spark, wm, tmp_path):
+        from tile_grid_spark.operators.vector_tiles import tiles_for_viewport
+        from tile_grid_spark.streaming.stream import refresh_mvt_store
+
+        rng = np.random.default_rng(3)
+        schema = "pid BIGINT, lon DOUBLE, lat DOUBLE"
+        pts = [(i, 8.0 + 3.0 * rng.random(), 46.0 + 2.0 * rng.random()) for i in range(300)]
+        store = str(tmp_path / "store")
+        refresh_mvt_store(store, spark.createDataFrame(pts, schema), wm, 9)
+
+        stored = spark.read.parquet(store)
+        bbox = (8.5, 46.5, 10.5, 47.5)
+        assert 0 < self._round_trips(lambda: tiles_for_viewport(stored, wm, *bbox, 9)) <= 10
+
+        batch = spark.createDataFrame(pts[:20] + [(1000, 9.0, 47.0), (1001, 12.5, 45.0)], schema)
+        sc = spark.sparkContext
+        sc.setJobGroup("serve-budget", "one store refresh")
+        try:
+            n = self._round_trips(lambda: refresh_mvt_store(store, batch, wm, 9))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert 0 < n <= 400, n
+        assert len(sc.statusTracker().getJobIdsForGroup("serve-budget")) <= 2
+        assert spark.read.parquet(store).agg({"n_features": "sum"}).first()[0] == 302

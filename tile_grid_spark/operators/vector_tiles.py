@@ -15,17 +15,21 @@ MAX_FEATURES_PER_TILE input rows in one tile raises rather than OOM
 inside a task — producers should roll up dense zooms first
 (operators/rollup.py).
 
-Every builder shares one per-tile frame: `_stage` projects lon/lat into
-the TMS CRS (grid_cols.xy_cols) and assigns the tile, `_local_xy`
-quantizes to tile-local integers, `_tiles` runs the per-tile build under
-the one budget check, and `_tile_row` is the output row.
+Every builder shares one per-tile frame: `_local_xy` quantizes to
+tile-local integers, `_stage` projects the point and path builders'
+lon/lat into the TMS CRS (grid_cols.xy_cols), assigns the tile and
+quantizes, `_tiles` runs the per-tile build under the one budget check,
+and `_tile_row` is the output row.
 
 Store maintenance (upsert_point_tiles, behind
 streaming.refresh_mvt_store) sends only the tiles a batch touches
-across the Python boundary: the batch's tile keys left-semi-join the
-stored tiles, one pass decodes those, overlays the batch points by fid
-and re-encodes; every other stored tile passes through as its stored
-bytes.
+across the Python boundary: the batch's distinct tile keys come to the
+driver and become one parsed IN-list predicate
+(grid_cols.tile_key_in_sql) that selects the stored tiles to merge, one
+pass decodes those, overlays the batch points by fid and re-encodes;
+every other stored tile passes the predicate's negation as its stored
+bytes. No join, no shuffle: a refresh is the key collect plus the
+store write.
 """
 
 from __future__ import annotations
@@ -40,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core.tms import Tms, ZoomParams
-from ..functions.grid_cols import tile_key, with_tile_xy, xy_cols
+from ..functions.grid_cols import tile_key_in_sql, xy_cols, xy_tile_x, xy_tile_y
 from ..functions.mvt import (
     DEFAULT_EXTENT,
     decode_line_tile,
@@ -60,13 +64,47 @@ TILES_SCHEMA = "tile_x BIGINT, tile_y BIGINT, n_features INT, mvt BINARY"
 # vertices (in an upsert, the batch rows)
 MAX_FEATURES_PER_TILE = 2_000_000
 
+# the most distinct tiles one upsert_point_tiles batch may touch: their
+# keys come to the driver and are parsed as one IN-list predicate, and
+# their merge runs in one task
+MAX_REFRESH_TILES = 10_000
 
-def _stage(points: DataFrame, tms: Tms, zoom: int, lon: str, lat: str) -> DataFrame:
-    """Rows + their TMS-CRS coordinates (_gx, _gy) and tile
-    (tile_x, tile_y) at `zoom`: the staging the point and path builders
-    share."""
-    gx, gy = xy_cols(tms, lon, lat)
-    return with_tile_xy(points.withColumns({"_gx": gx, "_gy": gy}), tms, zoom, "_gx", "_gy")
+# (JVM gateway, srid, ZoomParams, extent, lon, lat) -> _stage's Columns
+_STAGING: dict = {}
+
+
+def _stage(
+    points: DataFrame, tms: Tms, zoom: int, lon: str, lat: str, extent: int
+) -> DataFrame:
+    """Rows + their TMS-CRS coordinates (_gx, _gy), tile (tile_x,
+    tile_y) at `zoom` and clamped tile-local coordinates (_px, _py,
+    from _local_xy): the staging the point and path builders share.
+
+    The Columns are built once per (CRS, zoom, extent, lon, lat) and
+    reused: each Column operation costs ~12 py4j round trips, so
+    building these ~70 cost ~900 per call, most of a store refresh's
+    plan building. A Column is an immutable expression, so a reused one
+    gives the same plan; the JVM gateway is part of the key because a
+    Column does not outlive its JVM."""
+    from pyspark import SparkContext
+
+    p = tms.zoom_params(zoom)
+    key = (SparkContext._gateway, tms.crs().as_srid(), p, extent, lon, lat)
+    cols = _STAGING.get(key)
+    if cols is None:
+        gx, gy = xy_cols(tms, lon, lat)
+        px, py = _local_xy(F.col("_gx"), F.col("_gy"), p, extent, clamp=True)
+        cols = (
+            {"_gx": gx, "_gy": gy},
+            {"tile_x": xy_tile_x(F.col("_gx"), p), "tile_y": xy_tile_y(F.col("_gy"), p)},
+            {"_px": px, "_py": py},
+        )
+        if len(_STAGING) >= 64:  # a bound, not an eviction policy
+            _STAGING.clear()
+        _STAGING[key] = cols
+    for c in cols:
+        points = points.withColumns(c)
+    return points
 
 
 def _local_xy(
@@ -106,7 +144,7 @@ def _tile_row(pdf: pd.DataFrame, n_features: int, mvt: bytes) -> pd.DataFrame:
     return row if n_features else row.iloc[:0]
 
 
-def _tiles(rows: DataFrame, build) -> DataFrame:
+def _tiles(rows: DataFrame, build, single_task: bool = False) -> DataFrame:
     """Run `build(tile_pdf) -> _tile_row(...)` once per (tile_x, tile_y)
     group through the batched group kernel, behind the one budget
     check: a tile with more than MAX_FEATURES_PER_TILE input rows raises
@@ -123,7 +161,9 @@ def _tiles(rows: DataFrame, build) -> DataFrame:
             )
         return build(pdf)
 
-    return batched_group_map(rows, ("tile_x", "tile_y"), checked, TILES_SCHEMA)
+    return batched_group_map(
+        rows, ("tile_x", "tile_y"), checked, TILES_SCHEMA, single_task=single_task
+    )
 
 
 def _point_rows(
@@ -146,7 +186,6 @@ def _point_rows(
     null), so `tags` restores the declared Spark type to get python
     natives for the codec's int/bool/float/str switch; null and NaN are
     both elided from the feature's tags."""
-    px, py = _local_xy(F.col("_gx"), F.col("_gy"), tms.zoom_params(zoom), extent, clamp=True)
     attr_casts = {
         c: (
             int
@@ -162,13 +201,9 @@ def _point_rows(
         )
         for c in attr_cols
     }
-    rows = _stage(points, tms, zoom, lon, lat).select(
-        "tile_x",
-        "tile_y",
-        F.col(id_col).alias("fid"),
-        px.alias("px"),
-        py.alias("py"),
-        *[F.col(c) for c in attr_cols],
+    rows = _stage(points, tms, zoom, lon, lat, extent).selectExpr(
+        "tile_x", "tile_y", f"`{id_col}` AS fid", "_px AS px", "_py AS py",
+        *[f"`{c}`" for c in attr_cols],
     )
 
     def tags(pdf: pd.DataFrame) -> list[dict]:
@@ -380,8 +415,7 @@ def encode_path_tiles(
     semantics, as in encode_point_tiles."""
     from pyspark.sql import Window
 
-    px, py = _local_xy(F.col("_gx"), F.col("_gy"), tms.zoom_params(zoom), extent, clamp=True)
-    staged = _stage(points, tms, zoom, lon, lat)
+    staged = _stage(points, tms, zoom, lon, lat, extent)
     w = Window.partitionBy(id_col).orderBy(order_col)
     # first row of a trajectory (lag null) starts run 1, as does every
     # tile change; the cumulative sum is the run index
@@ -401,8 +435,8 @@ def encode_path_tiles(
         F.col(id_col).alias("fid"),
         "run_id",
         F.col(order_col).alias("vseq"),
-        px.alias("px"),
-        py.alias("py"),
+        F.col("_px").alias("px"),
+        F.col("_py").alias("py"),
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -670,16 +704,21 @@ def upsert_point_tiles(
     alone, which is encode_point_tiles. Returns the whole new tile set.
 
     Only the tiles the batch touches cross into Python. The batch's
-    packed tile keys left-semi-join the stored tiles; those stored
-    binaries and the batch's quantized point rows (the staging
-    encode_point_tiles uses) go through ONE batched group pass
-    with encode_point_tiles' per-tile rule (_point_tile_build): decode
-    the stored tile (tags included), overlay the batch points by fid —
-    the batch wins — and re-encode sorted by fid. Every other stored
-    tile left-anti-joins the same keys and passes through as its stored
+    distinct tile keys are collected to the driver (one Spark job, no
+    shuffle; as Arrow, 16 bytes a batch row) and become one parsed
+    predicate, grid_cols.tile_key_in_sql, whose per-column IN-lists a
+    parquet store prunes row groups with. The stored tiles it selects
+    and the batch's quantized point rows (the staging
+    encode_point_tiles uses) go through ONE batched group pass, in one
+    task, with encode_point_tiles' per-tile rule (_point_tile_build):
+    decode the stored tile (tags included), overlay the batch points by
+    fid — the batch wins — and re-encode sorted by fid. Every other
+    stored tile passes the predicate's null-safe negation as its stored
     bytes, never decoded: the encoder writes features sorted by fid, so
     re-encoding an untouched tile would give back the bytes it already
-    has.
+    has. A batch that touches more than MAX_REFRESH_TILES distinct
+    tiles raises ValueError while the plan is built, before anything
+    runs on the tiles.
 
     Duplicate fids inside one batch tile resolve deterministically: the
     copy that sorts last by (fid, px, py, *attr_cols) — nulls first —
@@ -694,26 +733,30 @@ def upsert_point_tiles(
         return encode_point_tiles(points, tms, zoom, id_col=id_col, attr_cols=attr_cols)
     extent = DEFAULT_EXTENT
     rows, tags = _point_rows(points, tms, zoom, id_col, "lon", "lat", extent, attr_cols)
-    # semi/anti joins ignore duplicate keys: no distinct, no shuffle for it
-    keys = rows.select(tile_key("tile_x", "tile_y").alias("_k"))
-    on = tile_key(old_tiles["tile_x"], old_tiles["tile_y"]) == keys["_k"]
+    keys = rows.selectExpr("tile_x", "tile_y").toArrow()
+    touched = np.unique(
+        np.stack([keys["tile_x"].to_numpy(), keys["tile_y"].to_numpy()], axis=1), axis=0
+    )
+    if len(touched) > MAX_REFRESH_TILES:
+        raise ValueError(
+            f"batch touches {len(touched)} tiles > MAX_REFRESH_TILES={MAX_REFRESH_TILES} "
+            "— split the batch, or rebuild the store with encode_point_tiles"
+        )
+    pred = tile_key_in_sql(touched)
     # stored rows carry typed non-null fillers in the point columns:
     # a null would turn an integral column into float64 in pandas
     fill = [
-        (
-            F.lit(0).cast(f.dataType)
-            if isinstance(f.dataType, (T.NumericType, T.BooleanType))
-            else F.lit(None).cast(f.dataType)
-        ).alias(f.name)
+        f"CAST({'0' if isinstance(f.dataType, (T.NumericType, T.BooleanType)) else 'NULL'}"
+        f" AS {f.dataType.simpleString()}) AS `{f.name}`"
         for f in rows.schema.fields[2:]
     ]
-    stored = old_tiles.join(keys, on, "left_semi").select("tile_x", "tile_y", *fill, "mvt")
-    merge_in = rows.withColumn("mvt", F.lit(None).cast("binary")).unionByName(stored)
-    untouched = old_tiles.join(keys, on, "left_anti").select(
+    stored = old_tiles.where(pred).selectExpr("tile_x", "tile_y", *fill, "mvt")
+    merge_in = rows.selectExpr("*", "CAST(NULL AS BINARY) AS mvt").unionByName(stored)
+    untouched = old_tiles.where(f"NOT coalesce({pred}, false)").selectExpr(
         "tile_x", "tile_y", "n_features", "mvt"
     )
     build = _point_tile_build(tags, attr_cols, "points", extent)
-    return _tiles(merge_in, build).unionByName(untouched)
+    return _tiles(merge_in, build, single_task=True).unionByName(untouched)
 
 
 def tiles_for_viewport(
@@ -729,29 +772,20 @@ def tiles_for_viewport(
     viewport covers at `zoom` (the reference epsilon-inset cover,
     antimeridian split included). The cover is enumerated DRIVER-side
     with the core library (viewports are a few hundred tiles by
-    construction — a renderer fetches one screen) and applied as TWO
-    filter layers: per-column IN-lists on raw tile_x/tile_y, which ARE
-    source-pushable (.explain shows them under PushedFilters, so a
-    parquet/Iceberg store prunes row groups on column statistics; the
-    rectangle-union over-selection is bounded by the cover's bbox), and
-    the exact packed-key IN (grid_cols.tile_key layout) that trims the
-    rows the pushable rectangle lets through. Raises if the viewport
-    covers more than 4096 tiles — that means the caller wants a lower
-    zoom, not a bigger scan."""
+    construction — a renderer fetches one screen) and applied as one
+    parsed predicate, grid_cols.tile_key_in_sql: per-column IN-lists on
+    raw tile_x/tile_y, which ARE source-pushable (.explain shows them
+    under PushedFilters, so a parquet/Iceberg store prunes row groups on
+    column statistics; the rectangle-union over-selection is bounded by
+    the cover's bbox), and the exact packed-key IN that trims the rows
+    the pushable rectangle lets through. The predicate is one string,
+    so building it is one py4j round trip where Column literals took
+    ~280. Raises if the viewport covers more than 4096 tiles — that
+    means the caller wants a lower zoom, not a bigger scan."""
     cover = list(tms.tiles(west, south, east, north, [zoom], truncate=False))
     if len(cover) > 4096:
         raise ValueError(
             f"viewport covers {len(cover)} tiles at z{zoom} — render a "
             "lower zoom (serving reads are screen-sized by construction)"
         )
-    if not cover:
-        return tiles.where(F.lit(False))
-    xs = sorted({int(t.x) for t in cover})
-    ys = sorted({int(t.y) for t in cover})
-    # mirror grid_cols.tile_key's no-zoom layout: tx * 2^28 + ty
-    keys = [(int(t.x) << 28) + int(t.y) for t in cover]
-    return tiles.where(
-        F.col("tile_x").isin(xs)
-        & F.col("tile_y").isin(ys)
-        & tile_key("tile_x", "tile_y").isin(keys)
-    )
+    return tiles.where(tile_key_in_sql((t.x, t.y) for t in cover))

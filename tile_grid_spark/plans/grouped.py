@@ -26,6 +26,7 @@ def batched_group_map(
     build: Callable[[pd.DataFrame], pd.DataFrame],
     schema,
     order: Sequence[str] = (),
+    single_task: bool = False,
 ) -> DataFrame:
     """Hash-repartition `rows` on `keys`, sort each partition by
     `keys + order`, and call `build(group_pdf) -> pd.DataFrame` once per
@@ -42,7 +43,11 @@ def batched_group_map(
     `repartition(*keys)` leaves the partition count to
     spark.sql.shuffle.partitions, which AQE coalesces to the data; a
     fixed defaultParallelism count (which AQE cannot coalesce) was
-    slower on the pipeline's raster and MVT stages."""
+    slower on the pipeline's raster and MVT stages. `single_task=True`
+    puts every row in one task instead, with no exchange: for inputs a
+    caller has already bounded (a store refresh's touched tiles,
+    vector_tiles.MAX_REFRESH_TILES), where the exchange would cost a
+    Spark job and a query stage per call and buy no parallelism."""
     keys = list(keys)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -65,5 +70,6 @@ def batched_group_map(
         if carry is not None and len(carry):
             yield build(carry)
 
-    parts = rows.repartition(*keys).sortWithinPartitions(*keys, *order)
+    parts = rows.coalesce(1) if single_task else rows.repartition(*keys)
+    parts = parts.sortWithinPartitions(*keys, *order)
     return parts.mapInPandas(run, schema)

@@ -75,12 +75,22 @@ def refresh_mvt_store(
     first (_recover_store), so the replay merges into the previous
     store. At 100 TB a table format bounds the rewritten span with
     partition pruning; the full-rewrite swap here is the format-free
-    equivalent."""
-    from ..operators.vector_tiles import upsert_point_tiles
+    equivalent.
+
+    A refresh of an existing store runs two Spark jobs: the collect of
+    the batch's tile keys and the store write. The store is read with
+    its declared TILES_SCHEMA (inferring it would be a third job), the
+    touched tiles are picked by a parsed IN-list predicate, not a join,
+    and a batch over vector_tiles.MAX_REFRESH_TILES distinct tiles
+    raises ValueError before anything is written."""
+    from ..operators.vector_tiles import TILES_SCHEMA, upsert_point_tiles
 
     spark = points.sparkSession
     _recover_store(store_path)
-    old = spark.read.parquet(store_path) if os.path.isdir(store_path) else None
+    old = None
+    if os.path.isdir(store_path):
+        # the declared schema: inferring it runs a Spark job per refresh
+        old = spark.read.schema(TILES_SCHEMA).parquet(store_path)
     merged = upsert_point_tiles(
         old, points, tms, zoom, id_col=id_col, attr_cols=tuple(attr_cols)
     )
@@ -102,9 +112,12 @@ def stream_mvt_store_refresh(
 ):
     """Streaming maintenance of the SERVED artifact itself: each
     micro-batch of (id, lon, lat[, attrs]) points re-encodes exactly
-    the vector tiles it touches (refresh_mvt_store; untouched tiles are
-    copied as stored bytes, the parquet store is rewritten in full) and
-    swaps the result into the live store. Append-mode source,
+    the vector tiles it touches (refresh_mvt_store: two Spark jobs, the
+    batch's tile keys picking the touched tiles by a parsed IN-list
+    predicate; untouched tiles are copied as stored bytes, the parquet
+    store is rewritten in full) and swaps the result into the live
+    store; a micro-batch over vector_tiles.MAX_REFRESH_TILES distinct
+    tiles fails the query before its write. Append-mode source,
     foreachBatch sink, one availableNow run over what the source holds;
     idempotent under at-least-once replay because the tile merge is
     keyed by feature id, and a batch replayed after a crash between the
